@@ -63,7 +63,7 @@ object BenchExtra {
         spark
           .range(0, n, 1, cpus.toInt * 2)
           .groupBy(pmod(col("id"), lit(g)).as("g"))
-          .agg(graft.spark.expressions.HllSketchAgg(col("id"), 14).as("sk"))
+          .agg(graft.spark.functions.hll_sketch_long(col("id"), 14).as("sk"))
           .write.format("noop").mode("overwrite").save()
       }
     } ++ Seq(
@@ -71,7 +71,7 @@ object BenchExtra {
         spark
           .range(0, n, 1, cpus.toInt * 2)
           .groupBy(pmod(col("id"), lit(10000)).as("g"))
-          .agg(graft.spark.expressions.CountMinSketchAgg(col("id"), 5, 2048).as("sk"))
+          .agg(graft.spark.functions.cms_sketch(col("id"), 5, 2048).as("sk"))
           .write.format("noop").mode("overwrite").save()
       },
       measure("hll_string_keys_4") {
@@ -81,7 +81,7 @@ object BenchExtra {
           .select(pmod(col("id"), lit(4)).as("g"),
             concat(lit("user_"), col("id")).cast("string").as("s"))
           .groupBy(col("g"))
-          .agg(graft.spark.expressions.HllSketchAgg(col("s"), 14).as("sk"))
+          .agg(graft.spark.functions.hll_sketch(col("s"), 14).as("sk"))
           .write.format("noop").mode("overwrite").save()
       })
     println(s"{${out.mkString(",")}}")

@@ -55,7 +55,7 @@ object Scaling {
             * lit(math.log(1e4) - math.log(10.0)) + lit(math.log(10.0))).as("turn_len"))
       .groupBy(col("role_idx"))
       // native TypedImperativeAggregate: V1 shuffle buffers + unboxed update
-      .agg(graft.spark.functions.hist_sketch_binary(col("turn_len"), layout))
+      .agg(graft.spark.functions.hist_sketch(col("turn_len"), layout))
       .collect()
   }
 

@@ -214,7 +214,7 @@ object SparkEntry {
     val transcripts = graft.spark.Transcripts.fromEvents(table(spark, dir, "events"))
     transcripts
       .groupBy(col("role"))
-      .agg(hist_sketch_binary(length(col("text")).cast("double"), latencyLayout).as("sk"))
+      .agg(hist_sketch(length(col("text")).cast("double"), latencyLayout).as("sk"))
       .select(
         col("role"),
         hist_total(col("sk")).as("n_turns"),
@@ -224,15 +224,11 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // 1. CustomLayout bin counts, exploded — exact, SQL-checkable bin by bin.
-    //    The native TypedImperativeAggregate (hist_sketch_binary: V1-format
-    //    shuffle buffers + unboxed update, ~20% faster than the kryo
-    //    Aggregator and the compact wire bytes ARE the shuffle buffer) is
-    //    the driver DEFAULT — q01/q02/q03/q21/q22/q24/q25 and entry() run
-    //    it; q20 covers the packed buffer; the kryo Aggregator path keeps
-    //    green coverage via q09/q18/q23/q27 (all byte-identical envelopes).
+    //    hist_sketch is a native TypedImperativeAggregate: V1-format
+    //    shuffle buffers + unboxed update; q20 covers the packed buffer.
     "q01_hist_custom_bins" -> { (s, dir) =>
       table(s, dir, "lineitem")
-        .agg(hist_sketch_binary(col("l_extendedprice"), priceLayout).as("sk"))
+        .agg(hist_sketch(col("l_extendedprice"), priceLayout).as("sk"))
         .select(explode(hist_bins(col("sk"))).as("b"))
         .select(col("b.bin_index").as("bin_index"), col("b.cnt").as("cnt"))
     },
@@ -243,8 +239,8 @@ object SparkEntry {
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
-          hist_sketch_binary(col("l_quantity"), qtyLayout).as("sk"),
-          hist_sketch_binary(col("l_quantity"), narrowQtyLayout).as("sk2"))
+          hist_sketch(col("l_quantity"), qtyLayout).as("sk"),
+          hist_sketch(col("l_quantity"), narrowQtyLayout).as("sk2"))
         .select(
           col("l_returnflag"),
           hist_total(col("sk")).as("n"),
@@ -264,7 +260,7 @@ object SparkEntry {
       val ps = Seq(0.5, 0.99)
       val est: Map[(String, Double), Double] = li
         .groupBy(col("l_returnflag"))
-        .agg(hist_sketch_binary(col("l_extendedprice"), priceLogLayout).as("sk"))
+        .agg(hist_sketch(col("l_extendedprice"), priceLogLayout).as("sk"))
         .select(col("l_returnflag"), hist_quantiles(col("sk"), ps).as("est"))
         .collect()
         .flatMap { r =>
@@ -757,7 +753,7 @@ object SparkEntry {
       val transcripts = graft.spark.Transcripts.fromEvents(table(s, dir, "events"))
       transcripts
         .groupBy(col("role"))
-        .agg(hist_sketch_binary(length(col("text")).cast("double"), latencyLayout).as("sk"))
+        .agg(hist_sketch(length(col("text")).cast("double"), latencyLayout).as("sk"))
         .select(
           col("role"),
           hist_total(col("sk")).as("n_turns"),
@@ -778,7 +774,7 @@ object SparkEntry {
           (unix_micros(col("ts").cast("timestamp")) -
             lag(unix_micros(col("ts").cast("timestamp")), 1).over(w)).as("lat_us"))
         .filter(col("lat_us").isNotNull)
-        .agg(hist_sketch_binary(col("lat_us").cast("double"), layout).as("sk"))
+        .agg(hist_sketch(col("lat_us").cast("double"), layout).as("sk"))
         .select(explode(hist_bins(col("sk"))).as("b"))
         .select(col("b.bin_index").as("bin_index"), col("b.cnt").as("cnt"))
     },
@@ -810,7 +806,7 @@ object SparkEntry {
       val n = groupN("g")
       val ranks = Seq(0L, n / 4, n / 2, (3 * n) / 4, n - 1)
       val estRow = li
-        .agg(hist_sketch_binary(col("v"), priceLogLayout).as("sk"))
+        .agg(hist_sketch(col("v"), priceLogLayout).as("sk"))
         .select(ranks.zipWithIndex.map { case (r, i) =>
           hist_value_at_rank(col("sk"), lit(r)).as(s"e$i")
         }: _*)
@@ -840,7 +836,7 @@ object SparkEntry {
       // treatment)
       val sketches = li
         .groupBy(col("l_returnflag"))
-        .agg(hist_sketch_binary(col("v"), layout).as("sk"))
+        .agg(hist_sketch(col("v"), layout).as("sk"))
         .select(
           col("l_returnflag"),
           hist_total(col("sk")).as("n"),
@@ -864,13 +860,11 @@ object SparkEntry {
     // 26. count-weighted histogram (reference addValue(double, long) —
     //     Histogram.java:282-290): bin counts of l_extendedprice weighted by
     //     l_linenumber, exploded; the oracle recounts each bin as
-    //     sum(l_linenumber) — exact. Runs the NATIVE weighted aggregate
-    //     (V1-buffer TypedImperativeAggregate, unboxed (value, weight)
-    //     update); the kryo hist_sketch_weighted stays byte-identical
-    //     (A/B-tested in ExpressionSpec).
+    //     sum(l_linenumber) — exact. The native weighted aggregate has a
+    //     V1 shuffle buffer and an unboxed (value, weight) update.
     "q26_weighted_hist" -> { (s, dir) =>
       table(s, dir, "lineitem")
-        .agg(hist_sketch_weighted_binary(
+        .agg(hist_sketch_weighted(
           col("l_extendedprice"), col("l_linenumber").cast("long"), priceLayout).as("sk"))
         .select(explode(hist_bins(col("sk"))).as("b"))
         .select(col("b.bin_index").as("bin_index"), col("b.cnt").as("cnt"))
@@ -884,14 +878,12 @@ object SparkEntry {
     //     bound-checked against exact weighted counts.
     "q27_sketch_rollup" -> { (s, dir) =>
       // THREE aggregation passes over a once-persisted six-column projection
-      // (was five — guide §1.2: fewer full passes): (1) the kryo-Aggregator
-      // partials (the stored-sketch-table level, keeping kryo coverage),
-      // (2) direct single-level sketches + the weighted CMS folded into ONE
-      // pass on the native TypedImperativeAggregate forms (byte-identical
-      // to the kryo forms — ExpressionSpec parity; the byte-compares below
-      // assert it in-query), (3) stats + per-flag weighted sums folded into
-      // ONE rollup pass (the grouping-sets trick: global row + per-flag rows
-      // from a single shuffle). The weighted-CMS bound check evaluates
+      // (was five — guide §1.2: fewer full passes): (1) the partials (the
+      // stored-sketch-table level), (2) direct single-level sketches + the
+      // weighted CMS folded into ONE pass (the byte-compares below assert
+      // merged == direct in-query), (3) stats + per-flag weighted sums
+      // folded into ONE rollup pass (the grouping-sets trick: global row +
+      // per-flag rows from a single shuffle). The weighted-CMS bound check evaluates
       // driver-side on the collected sketch bytes via the same CountMin
       // kernel the cms_estimate UDF calls — 3 rows, identical arithmetic.
       // MEMORY_AND_DISK, not MEMORY_ONLY — eviction under memory pressure
@@ -929,14 +921,11 @@ object SparkEntry {
           kll_merge(col("kll")).as("kll"))
         .collect()(0)
       val direct = li.agg(
-        hist_sketch_binary(col("l_extendedprice"), priceLayout).as("hist"),
-        graft.spark.expressions.HllSketchAgg(
-          col("l_partkey"), graft.sketches.Hll.DefaultPrecision).as("hll"),
-        graft.spark.expressions.CountMinSketchAgg(col("l_returnflag"), 5, 2048).as("cms"),
-        graft.spark.expressions.BloomSketchAgg(
-          col("l_orderkey"), 1 << 20, 0.01).as("bloom"),
-        graft.spark.expressions.CountMinWeightedSketchAgg(
-          col("l_returnflag"), col("l_linenumber").cast("long"), 5, 2048).as("wsk"))
+        hist_sketch(col("l_extendedprice"), priceLayout).as("hist"),
+        hll_sketch_long(col("l_partkey")).as("hll"),
+        cms_sketch(col("l_returnflag"), 5, 2048).as("cms"),
+        bloom_sketch(col("l_orderkey"), 1 << 20, 0.01).as("bloom"),
+        cms_sketch_weighted(col("l_returnflag"), col("l_linenumber"), 5, 2048).as("wsk"))
         .collect()(0)
       def b(r: org.apache.spark.sql.Row, i: Int): Array[Byte] = r.getAs[Array[Byte]](i)
       val histId = java.util.Arrays.equals(b(merged, 0), b(direct, 0))

@@ -66,7 +66,9 @@ final class CountMin private (
   }
 
   def toBytes: Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + counters.length * 8)
+    val size = CountMin.denseBytes(counters.length)
+    require(size <= Int.MaxValue, s"count-min of $size bytes is too large to serialize")
+    val buf = ByteBuffer.allocate(size.toInt)
     buf.putInt(depth).putInt(width).putLong(totalVar)
     counters.foreach(buf.putLong)
     buf.array()
@@ -102,10 +104,9 @@ object CountMin {
       if (c.counters(i) != 0L) nNonzero += 1
       i += 1
     }
-    val dense = 4 + 4 + 8 + n * 8
     // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
-    if (20L + nNonzero.toLong * 15L >= dense.toLong) return c.toBytes
-    val out = new java.io.ByteArrayOutputStream(20 + nNonzero * 8)
+    if (20L + nNonzero.toLong * 15L >= denseBytes(n)) return c.toBytes
+    val out = new java.io.ByteArrayOutputStream(math.min(20L + nNonzero * 8L, 1L << 30).toInt)
     out.write(0xff)
     Varint.write(out, c.depth.toLong)
     Varint.write(out, c.width.toLong)
@@ -123,6 +124,9 @@ object CountMin {
     }
     out.toByteArray
   }
+
+  /** Size of the dense wire form ([[CountMin.toBytes]]) for `n` counters. */
+  def denseBytes(n: Int): Long = 4L + 4L + 8L + n.toLong * 8L
 
   def fromBytes(bytes: Array[Byte]): CountMin = {
     if (bytes(0) == -1.toByte) { // compact sparse-pair form
@@ -213,7 +217,9 @@ final class BloomFilter private (
   }
 
   def toBytes: Array[Byte] = {
-    val buf = ByteBuffer.allocate(8 + 4 + bits.length * 8)
+    val size = BloomFilter.denseBytes(bits.length)
+    require(size <= Int.MaxValue, s"bloom of $size bytes is too large to serialize")
+    val buf = ByteBuffer.allocate(size.toInt)
     buf.putLong(numBits).putInt(numHashes)
     bits.foreach(buf.putLong)
     buf.array()
@@ -249,9 +255,8 @@ object BloomFilter {
       if (words(i) != 0L) nNonzero += 1
       i += 1
     }
-    val dense = 8 + 4 + words.length * 8
-    if (16L + nNonzero.toLong * 13L >= dense.toLong) return f.toBytes
-    val out = new java.io.ByteArrayOutputStream(16 + nNonzero * 10)
+    if (16L + nNonzero.toLong * 13L >= denseBytes(words.length)) return f.toBytes
+    val out = new java.io.ByteArrayOutputStream(math.min(16L + nNonzero * 10L, 1L << 30).toInt)
     out.write(0xff)
     Varint.write(out, f.numBits)
     Varint.write(out, f.numHashes.toLong)
@@ -270,6 +275,9 @@ object BloomFilter {
     }
     out.toByteArray
   }
+
+  /** Size of the dense wire form ([[BloomFilter.toBytes]]) for `nWords` words. */
+  def denseBytes(nWords: Int): Long = 8L + 4L + nWords.toLong * 8L
 
   def fromBytes(bytes: Array[Byte]): BloomFilter = {
     if (bytes(0) == -1.toByte) { // compact sparse-word form

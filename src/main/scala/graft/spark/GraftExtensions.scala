@@ -17,13 +17,12 @@ import graft.spark.expressions._
  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
  * }}}
  *
- * Native expressions (scalar sketch queries and layout-parameterized
- * histogram aggregates) are registered via `injectFunction` with expression
- * builders — SQL-callable with arbitrary layout parameters, e.g.
- * `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)`. The udaf-backed
- * companion sketches (HLL/CMS/Bloom/t-digest/KLL) register through the
- * session UDF registry on first use (they are `Aggregator`s, which have no
- * expression-builder form).
+ * Every sketch aggregate (builders and `*_merge`) and the histogram scalar
+ * queries are native expressions, registered via `injectFunction` from
+ * [[GraftExtensions.nativeBuilders]] — SQL-callable with literal parameters,
+ * e.g. `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)` or
+ * `hll_sketch(c, 12)`. The remaining scalar UDFs (companion-sketch queries,
+ * text functions) register through the session UDF registry on first use.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,7 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           builder))
     }
     // A resolution rule runs with a session handle before analysis; use the
-    // first invocation to install the UDF/UDAF registry entries idempotently.
+    // first invocation to install the scalar UDF registry entries idempotently.
     extensions.injectResolutionRule { session =>
       if (!GraftExtensions.installed.contains(session)) {
         GraftExtensions.installed.synchronized {
@@ -140,6 +139,14 @@ object GraftExtensions {
       mkLayout(args.drop(2)))
       .toAggregateExpression()
 
+  /** Layout of the parameterless SQL `hist_sketch` / `hist_sketch_weighted`. */
+  private val DefaultSqlLayout: Layout = LogQuadraticLayout(1e-8, 1e-2, -1e9, 1e9)
+
+  private def mergeAgg(codec: SketchCodec[_ <: AnyRef]): (String, Seq[Expression] => Expression) = {
+    val fn = s"${codec.family}_merge"
+    fn -> expectArgs(fn, 1)(args => SketchMergeAgg(args.head, codec).toAggregateExpression())
+  }
+
   /** Expression builders shared by `injectFunction` (new sessions) and
    * [[functions.registerAll]] (existing sessions). */
   private[spark] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -213,7 +220,11 @@ object GraftExtensions {
     "hist_overflow" -> expectArgs("hist_overflow", 1)(
       args => HistStat(args(0), HistStat.Overflow)),
     "hist_bins" -> expectArgs("hist_bins", 1)(args => HistBins(args(0))),
-    // layout-parameterized histogram aggregates (value, layout params...)
+    // histogram aggregates: the default-layout forms, then the
+    // layout-parameterized ones (value, layout params...)
+    "hist_sketch" -> expectArgs("hist_sketch", 1)(sketchAgg("hist_sketch", _ => DefaultSqlLayout)),
+    "hist_sketch_weighted" -> expectArgs("hist_sketch_weighted", 2)(
+      weightedSketchAgg("hist_sketch_weighted", _ => DefaultSqlLayout)),
     "hist_sketch_log_quadratic" -> expectArgs("hist_sketch_log_quadratic", 5)(sketchAgg(
       "hist_sketch_log_quadratic",
       a => LogQuadraticLayout(
@@ -268,10 +279,8 @@ object GraftExtensions {
       expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(packedSketchAgg(
         "hist_sketch_packed_custom",
         a => CustomLayout(a.map(litDouble("hist_sketch_packed_custom", _)).toArray))),
-    // parameterized companion-sketch aggregates: native TypedImperativeAggregate
-    // forms whose accuracy parameters are per-call SQL literals (the udaf
-    // registry can only bind fixed constructor parameters). 1-arg forms use
-    // the library defaults, matching the DSL.
+    // companion-sketch aggregates: accuracy parameters are per-call SQL
+    // literals; 1-arg forms use the library defaults, matching the DSL
     "hll_sketch" -> { args =>
       val p = args.length match {
         case 1 => graft.sketches.Hll.DefaultPrecision
@@ -329,6 +338,13 @@ object GraftExtensions {
       }
       KllSketchAgg(Cast(args.head, DoubleType), k).toAggregateExpression()
     },
+    // re-merge of stored sketch blobs, one per family
+    mergeAgg(SketchCodec.HistCodec),
+    mergeAgg(SketchCodec.HllCodec),
+    mergeAgg(SketchCodec.CmsCodec),
+    mergeAgg(SketchCodec.BloomCodec),
+    mergeAgg(SketchCodec.TDigestCodec),
+    mergeAgg(SketchCodec.KllCodec),
     // native bin-index scalar with layout literals (whole-stage codegen)
     "hist_bin_index_log_quadratic" -> expectArgs("hist_bin_index_log_quadratic", 5)(args =>
       HistBinIndex(

@@ -2,46 +2,30 @@ package graft.spark.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.sketches._
 
 /**
- * Native `TypedImperativeAggregate` forms of the companion sketches
- * (HLL / count-min / Bloom / t-digest / KLL), parameterized per call —
- * the builders behind the SQL registry's `hll_sketch(c, precision)`,
+ * The companion-sketch builder aggregates (HLL / count-min / Bloom /
+ * t-digest / KLL), parameterized per call: `hll_sketch(c, precision)`,
  * `cms_sketch(c, depth, width)`, `bloom_sketch(c, expected, fpp)`,
- * `tdigest_sketch(v, compression)`, `kll_sketch(v, k)` forms (reference
- * analogy: the sketch-family constructors take their accuracy parameters at
- * creation; dynahist `Histogram.createDynamic(layout)` is the histogram
- * instance of the same pattern).
+ * `tdigest_sketch(v, compression)`, `kll_sketch(v, k)` in both the Column
+ * DSL and SQL. The sketch families take their accuracy parameters at
+ * creation, as dynahist `Histogram.createDynamic(layout)` does.
  *
- * Functionally identical to the kryo `Aggregator`s in
- * [[graft.spark.Aggs]] (byte-identical outputs for the deterministic
- * formats — HLL register-max, CMS counter-add, Bloom bit-OR — asserted in
- * ExpressionSpec), but the aggregation buffer crossing the
- * partial->shuffle->final boundary is each sketch's compact wire format
- * rather than a kryo object graph, and the per-row update path is unboxed
- * for primitive inputs (getDouble/getLong on the bound ordinal).
+ * Merge, result bytes and the compact shuffle buffer come from the family's
+ * [[SketchCodec]]; the per-row update is unboxed for primitive inputs
+ * (getDouble/getLong/getUTF8String on the bound ordinal).
  */
-abstract class CompanionSketchAgg[S <: AnyRef] extends TypedImperativeAggregate[S] {
+abstract class CompanionSketchAgg[S <: AnyRef] extends SketchAgg[S] {
   def child: Expression
 
   override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  protected def toBytes(s: S): Array[Byte]
-  protected def fromBytes(b: Array[Byte]): S
-
-  override def eval(buffer: S): Any = toBytes(buffer)
-  override def serialize(buffer: S): Array[Byte] = toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): S = fromBytes(bytes)
 }
 
 private[spark] object ItemSketchAgg {
-  /** Hash of a string input, bit-identical to the kryo path's
+  /** Hash of a string input, bit-identical to
    * `Hashing.hashString(s.toString)` on EVERY input: valid UTF-8 hashes
    * its bytes directly (no per-row `java.lang.String` — `hashString` is
    * defined as the hash of the UTF-8 encoding, and valid bytes round-trip
@@ -54,8 +38,9 @@ private[spark] object ItemSketchAgg {
 }
 
 /** Item-keyed sketches (HLL / CMS / Bloom): string inputs hash as strings,
- * integral inputs as longs — matching the `Aggs.*StringAgg`/`*LongAgg`
- * split, dispatched on the child's type at bind time.
+ * integral inputs as longs, dispatched on the child's type at bind time. The
+ * Column DSL casts its input first (`hll_sketch`/`cms_sketch` to string,
+ * `hll_sketch_long`/`bloom_sketch` to long); SQL passes it through.
  *
  * String rows hash through [[ItemSketchAgg.utf8Hash]] (no per-row
  * `java.lang.String` for valid UTF-8 — the 100 TB string-key path); both
@@ -125,16 +110,10 @@ case class HllSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[Hll] {
+  override protected def codec: SketchCodec[Hll] = SketchCodec.HllCodec
   override def createAggregationBuffer(): Hll = Hll(precision)
   override protected def addHash(b: Hll, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: Hll, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: Hll, other: Hll): Hll = buffer.merge(other)
-  override protected def toBytes(s: Hll): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): Hll = Hll.fromBytes(b)
-  // shuffle buffers take the compact (sparse) form: a group that saw few
-  // items ships ~3 B per set register instead of the dense 2^p array; the
-  // result bytes (eval -> toBytes) stay dense wire format
-  override def serialize(buffer: Hll): Array[Byte] = Hll.toCompactBytes(buffer)
   override def withNewMutableAggBufferOffset(n: Int): HllSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): HllSketchAgg =
@@ -144,17 +123,6 @@ case class HllSketchAgg(
   override def prettyName: String = "hll_sketch"
 }
 
-object HllSketchAgg {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor (the [[graft.spark.expressions.HistogramSketchAgg]]
-   * DSL pattern): native aggregate with the compact wire-format buffer. */
-  def apply(c: Column, precision: Int): Column =
-    ColumnBridge.column(
-      HllSketchAgg(ColumnBridge.expression(c), precision).toAggregateExpression())
-}
-
 case class CountMinSketchAgg(
     child: Expression,
     depth: Int,
@@ -162,15 +130,10 @@ case class CountMinSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[CountMin] {
+  override protected def codec: SketchCodec[CountMin] = SketchCodec.CmsCodec
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
   override protected def addHash(b: CountMin, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: CountMin, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: CountMin, other: CountMin): CountMin = buffer.merge(other)
-  override protected def toBytes(s: CountMin): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): CountMin = CountMin.fromBytes(b)
-  // shuffle buffers varint-encode the counter matrix (zero counters cost
-  // 1 byte, not 8); result bytes stay the dense wire format
-  override def serialize(buffer: CountMin): Array[Byte] = CountMin.toCompactBytes(buffer)
   override def withNewMutableAggBufferOffset(n: Int): CountMinSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): CountMinSketchAgg =
@@ -178,16 +141,6 @@ case class CountMinSketchAgg(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CountMinSketchAgg =
     copy(child = c.head)
   override def prettyName: String = "cms_sketch"
-}
-
-object CountMinSketchAgg {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor — native aggregate, compact wire-format buffer. */
-  def apply(c: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(
-      CountMinSketchAgg(ColumnBridge.expression(c), depth, width).toAggregateExpression())
 }
 
 /** (item, weight) count-min: each row adds `weight` to its item's counters —
@@ -200,6 +153,7 @@ case class CountMinWeightedSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends CompanionSketchAgg[CountMin] {
+  override protected def codec: SketchCodec[CountMin] = SketchCodec.CmsCodec
   override def child: Expression = item
   override def children: Seq[Expression] = Seq(item, weight)
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
@@ -227,10 +181,6 @@ case class CountMinWeightedSketchAgg(
     }
     buffer
   }
-  override def merge(buffer: CountMin, other: CountMin): CountMin = buffer.merge(other)
-  override protected def toBytes(s: CountMin): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): CountMin = CountMin.fromBytes(b)
-  override def serialize(buffer: CountMin): Array[Byte] = CountMin.toCompactBytes(buffer)
   override def withNewMutableAggBufferOffset(n: Int): CountMinWeightedSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): CountMinWeightedSketchAgg =
@@ -241,19 +191,6 @@ case class CountMinWeightedSketchAgg(
   override def prettyName: String = "cms_sketch_weighted"
 }
 
-object CountMinWeightedSketchAgg {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor — native aggregate, compact wire-format buffer. */
-  def apply(item: Column, weight: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(
-      CountMinWeightedSketchAgg(
-        ColumnBridge.expression(item),
-        ColumnBridge.expression(weight.cast("long")),
-        depth, width).toAggregateExpression())
-}
-
 case class BloomSketchAgg(
     child: Expression,
     expectedItems: Long,
@@ -261,15 +198,10 @@ case class BloomSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[BloomFilter] {
+  override protected def codec: SketchCodec[BloomFilter] = SketchCodec.BloomCodec
   override def createAggregationBuffer(): BloomFilter = BloomFilter(expectedItems, fpp)
   override protected def addHash(b: BloomFilter, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: BloomFilter, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter = buffer.merge(other)
-  override protected def toBytes(s: BloomFilter): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): BloomFilter = BloomFilter.fromBytes(b)
-  // shuffle buffers take the sparse nonzero-word form; result bytes stay
-  // the dense wire format
-  override def serialize(buffer: BloomFilter): Array[Byte] = BloomFilter.toCompactBytes(buffer)
   override def withNewMutableAggBufferOffset(n: Int): BloomSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): BloomSketchAgg =
@@ -279,27 +211,15 @@ case class BloomSketchAgg(
   override def prettyName: String = "bloom_sketch"
 }
 
-object BloomSketchAgg {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor — native aggregate, compact wire-format buffer. */
-  def apply(c: Column, expectedItems: Long, fpp: Double): Column =
-    ColumnBridge.column(
-      BloomSketchAgg(ColumnBridge.expression(c), expectedItems, fpp).toAggregateExpression())
-}
-
 case class TDigestSketchAgg(
     child: Expression,
     compression: Double,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends DoubleSketchAgg[TDigest] {
+  override protected def codec: SketchCodec[TDigest] = SketchCodec.TDigestCodec
   override def createAggregationBuffer(): TDigest = TDigest(compression)
   override protected def addDouble(b: TDigest, v: Double): Unit = b.add(v)
-  override def merge(buffer: TDigest, other: TDigest): TDigest = buffer.merge(other)
-  override protected def toBytes(s: TDigest): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): TDigest = TDigest.fromBytes(b)
   override def withNewMutableAggBufferOffset(n: Int): TDigestSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TDigestSketchAgg =
@@ -315,11 +235,9 @@ case class KllSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends DoubleSketchAgg[Kll] {
+  override protected def codec: SketchCodec[Kll] = SketchCodec.KllCodec
   override def createAggregationBuffer(): Kll = Kll(k)
   override protected def addDouble(b: Kll, v: Double): Unit = b.add(v)
-  override def merge(buffer: Kll, other: Kll): Kll = buffer.merge(other)
-  override protected def toBytes(s: Kll): Array[Byte] = s.toBytes
-  override protected def fromBytes(b: Array[Byte]): Kll = Kll.fromBytes(b)
   override def withNewMutableAggBufferOffset(n: Int): KllSketchAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): KllSketchAgg =

@@ -1,36 +1,37 @@
 package graft.spark.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.core.{Histogram, HistogramSerde, Layout, SketchEnvelope}
+import graft.core.{Histogram, HistogramSerde, Layout}
 
 /**
- * Histogram sketch aggregation as a native `TypedImperativeAggregate`.
- *
- * Functionally identical to the `Aggregator`-based `hist_sketch`, but the
- * aggregation buffer crossing the partial->shuffle->final boundary is the V1
- * wire format rather than a kryo object graph: a compact bit-packed payload
- * (dense-or-sparse, whichever is fewer bits) instead of the raw 8-byte-per-
- * bin counter array. At 10^5-10^6 shuffled group buffers that is the
- * difference between KBs and tens of bytes per sketch on the wire.
+ * Histogram builder aggregates (`hist_sketch`, `hist_sketch_weighted` and
+ * the layout-parameterized SQL forms). The result is the self-describing
+ * envelope of [[SketchCodec.HistCodec]]. The layout is fixed per call, so
+ * the buffer crossing the partial->shuffle->final boundary is the bare V1
+ * payload: a bit-packed dense-or-sparse encoding, whichever is fewer bits,
+ * tens of bytes per sketch instead of 8 bytes per bin.
  */
+abstract class HistogramAgg extends SketchAgg[Histogram] {
+  def layout: Layout
+
+  override protected def codec: SketchCodec[Histogram] = SketchCodec.HistCodec
+  override def serialize(buffer: Histogram): Array[Byte] = HistogramSerde.toBytes(buffer)
+  override def deserialize(bytes: Array[Byte]): Histogram =
+    HistogramSerde.fromBytes(layout, bytes)
+}
+
 case class HistogramSketchAgg(
     child: Expression,
     layout: Layout,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0,
     packed: Boolean = false)
-    extends TypedImperativeAggregate[Histogram] {
+    extends HistogramAgg {
 
   override def children: Seq[Expression] = Seq(child)
-
-  override def nullable: Boolean = false
-
-  override def dataType: DataType = BinaryType
 
   // packed = adaptive bit-width counters for the PRE-shuffle partial buffers
   // (where the 10^5-10^6 per-group buffers live); post-shuffle deserialize
@@ -43,8 +44,7 @@ case class HistogramSketchAgg(
   // (which boxes a java.lang.Double per row; at 10^8-row rates the boxing
   // garbage alone drives young-GC pauses, measured on multi-executor runs).
   @transient private lazy val boundOrdinal: Int = child match {
-    case b: org.apache.spark.sql.catalyst.expressions.BoundReference
-        if b.dataType == org.apache.spark.sql.types.DoubleType => b.ordinal
+    case b: BoundReference if b.dataType == DoubleType => b.ordinal
     case _ => -1
   }
 
@@ -59,15 +59,6 @@ case class HistogramSketchAgg(
     buffer
   }
 
-  override def merge(buffer: Histogram, other: Histogram): Histogram = buffer.add(other)
-
-  override def eval(buffer: Histogram): Any = SketchEnvelope.toBytes(buffer)
-
-  override def serialize(buffer: Histogram): Array[Byte] = HistogramSerde.toBytes(buffer)
-
-  override def deserialize(bytes: Array[Byte]): Histogram =
-    HistogramSerde.fromBytes(layout, bytes)
-
   override def withNewMutableAggBufferOffset(newOffset: Int): HistogramSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
 
@@ -78,26 +69,13 @@ case class HistogramSketchAgg(
       newChildren: IndexedSeq[Expression]): HistogramSketchAgg =
     copy(child = newChildren.head)
 
-  override def prettyName: String = "hist_sketch_binary"
-}
-
-object HistogramSketchAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor: aggregate with a V1-binary buffer. */
-  def apply(c: Column, layout: Layout): Column =
-    ColumnBridge.column(
-      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout)
-        .toAggregateExpression())
+  override def prettyName: String = "hist_sketch"
 }
 
 /**
- * Count-weighted histogram aggregation with the same V1-wire aggregation
- * buffer as [[HistogramSketchAgg]] (reference semantics
- * `addValue(double, long)`, Histogram.java:283-290). The kryo
- * `Aggregator`-based `hist_sketch_weighted` remains as the
- * encoder-API variant; this is the high-group-cardinality path — compact
- * shuffle buffers plus an unboxed (getDouble/getLong) per-row update.
+ * Count-weighted histogram aggregation (reference semantics
+ * `addValue(double, long)`, Histogram.java:283-290): rows with a null value
+ * or weight are skipped; the update is unboxed for both children.
  */
 case class HistogramSketchWeightedAgg(
     value: Expression,
@@ -105,26 +83,20 @@ case class HistogramSketchWeightedAgg(
     layout: Layout,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Histogram] {
+    extends HistogramAgg {
 
   override def children: Seq[Expression] = Seq(value, weight)
-
-  override def nullable: Boolean = false
-
-  override def dataType: DataType = BinaryType
 
   override def createAggregationBuffer(): Histogram = Histogram(layout)
 
   // Unboxed hot path for BOTH children (see HistogramSketchAgg.boundOrdinal):
   // eval() boxes a java.lang.Double + java.lang.Long per row otherwise.
   @transient private lazy val valueOrdinal: Int = value match {
-    case b: org.apache.spark.sql.catalyst.expressions.BoundReference
-        if b.dataType == DoubleType => b.ordinal
+    case b: BoundReference if b.dataType == DoubleType => b.ordinal
     case _ => -1
   }
   @transient private lazy val weightOrdinal: Int = weight match {
-    case b: org.apache.spark.sql.catalyst.expressions.BoundReference
-        if b.dataType == org.apache.spark.sql.types.LongType => b.ordinal
+    case b: BoundReference if b.dataType == LongType => b.ordinal
     case _ => -1
   }
 
@@ -145,15 +117,6 @@ case class HistogramSketchWeightedAgg(
     buffer
   }
 
-  override def merge(buffer: Histogram, other: Histogram): Histogram = buffer.add(other)
-
-  override def eval(buffer: Histogram): Any = SketchEnvelope.toBytes(buffer)
-
-  override def serialize(buffer: Histogram): Array[Byte] = HistogramSerde.toBytes(buffer)
-
-  override def deserialize(bytes: Array[Byte]): Histogram =
-    HistogramSerde.fromBytes(layout, bytes)
-
   override def withNewMutableAggBufferOffset(newOffset: Int): HistogramSketchWeightedAgg =
     copy(mutableAggBufferOffset = newOffset)
 
@@ -164,18 +127,5 @@ case class HistogramSketchWeightedAgg(
       newChildren: IndexedSeq[Expression]): HistogramSketchWeightedAgg =
     copy(value = newChildren(0), weight = newChildren(1))
 
-  override def prettyName: String = "hist_sketch_weighted_binary"
-}
-
-object HistogramSketchWeightedAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column constructor: (value, weight) aggregate with a V1-binary buffer. */
-  def apply(value: Column, weight: Column, layout: Layout): Column =
-    ColumnBridge.column(
-      HistogramSketchWeightedAgg(
-        ColumnBridge.expression(value.cast("double")),
-        ColumnBridge.expression(weight.cast("long")),
-        layout)
-        .toAggregateExpression())
+  override def prettyName: String = "hist_sketch_weighted"
 }

@@ -228,4 +228,17 @@ class SketchSpec extends AnyFunSuite {
       if (n >= 90000) assert(c.length == bf.toBytes.length) // dense fallback
     }
   }
+
+  test("count-min and bloom dense sizes do not overflow Int past 268M words") {
+    // 300M counters / words is 2.4 GB dense: Int arithmetic (n * 8) wraps
+    // negative, which made the compact encoders pick the sparse form for a
+    // sketch whose dense form is smaller
+    val n = 300000000
+    assert(CountMin.denseBytes(n) == 16L + 2400000000L)
+    assert(BloomFilter.denseBytes(n) == 12L + 2400000000L)
+    val cms = CountMin(5, 2048)
+    assert(CountMin.denseBytes(cms.counters.length) == cms.toBytes.length)
+    val bf = BloomFilter(1000, 0.01)
+    assert(BloomFilter.denseBytes(bf.bits.length) == bf.toBytes.length)
+  }
 }

@@ -72,28 +72,16 @@ class ExpressionSpec extends AnyFunSuite {
     assert(viaExpr == viaSketch)
   }
 
-  test("hist_sketch_binary (TypedImperativeAggregate) equals the Aggregator-based sketch") {
-    import spark.implicits._
+  test("hist_sketch (TypedImperativeAggregate) reproduces the stored golden bytes " +
+    "and shuffles compact V1 buffers") {
+    // every unweighted histogram builder name, DSL and SQL, at 1 and 8
+    // partitions, against the bytes the former kryo Aggregator produced
+    AggGolden.check(spark, n => n.startsWith("dsl.hist_sketch") || n.startsWith("sql.hist_sketch"))
+    // the aggregation buffer is the compact V1 payload, far smaller than
+    // the 8-byte-per-bin counter array
     val rnd = new java.util.SplittableRandom(12L)
-    val rows = (0 until 30000).map(i => (s"g${i % 5}", rnd.nextDouble() * 1e5))
-    val df = rows.toDF("g", "v").repartition(8)
-    val a = df
-      .groupBy(col("g"))
-      .agg(hist_sketch(col("v"), layout).as("sk"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
-      .toMap
-    val b = df
-      .groupBy(col("g"))
-      .agg(hist_sketch_binary(col("v"), layout).as("sk"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
-      .toMap
-    assert(a == b)
-    // the binary-buffer variant must shuffle compact V1 payloads: its
-    // serialized buffer is dramatically smaller than the kryo object graph
     val h = graft.core.Histogram(layout)
-    rows.foreach(r => h.addValue(r._2))
+    (0 until 30000).foreach(_ => h.addValue(rnd.nextDouble() * 1e5))
     val v1 = graft.core.HistogramSerde.toBytes(h).length
     assert(v1 < 8 * h.nonEmptyBins.size, s"V1 size $v1 not compact")
   }
@@ -292,34 +280,32 @@ class ExpressionSpec extends AnyFunSuite {
       "SQL two-level hll_merge rollup must be byte-identical to the direct sketch")
   }
 
-  test("hist_sketch_weighted_binary is byte-identical to the kryo weighted aggregator " +
-    "and to weight-fold repetition") {
+  test("hist_sketch_weighted reproduces the stored golden bytes " +
+    "and equals weight-fold repetition") {
+    AggGolden.check(spark, _.endsWith("hist_sketch_weighted"))
     import spark.implicits._
     val rnd = new java.util.SplittableRandom(19L)
     val rows = (0 until 20000).map { i =>
       (s"g${i % 7}", rnd.nextDouble() * 1e5, (rnd.nextInt(5) + 1).toLong)
     }
     val df = rows.toDF("g", "v", "w").repartition(8)
-    def bytesOf(agg: org.apache.spark.sql.Column): Map[String, Seq[Byte]] = df
+    val weighted = df
       .groupBy(col("g"))
-      .agg(agg.as("sk"))
+      .agg(hist_sketch_weighted(col("v"), col("w"), layout).as("sk"))
       .collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
       .toMap
-    val kryo = bytesOf(hist_sketch_weighted(col("v"), col("w"), layout))
-    val native = bytesOf(hist_sketch_weighted_binary(col("v"), col("w"), layout))
-    assert(kryo == native)
     // weight w must equal adding the value w times (reference addValue(v, n))
     val repeated = rows
       .flatMap { case (g, v, w) => Seq.fill(w.toInt)((g, v)) }
       .toDF("g", "v")
       .repartition(8)
       .groupBy(col("g"))
-      .agg(hist_sketch_binary(col("v"), layout).as("sk"))
+      .agg(hist_sketch(col("v"), layout).as("sk"))
       .collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
       .toMap
-    assert(native == repeated)
+    assert(weighted == repeated)
   }
 
   test("item-sketch UTF8-byte hashing is byte-identical to the String path " +
@@ -327,7 +313,7 @@ class ExpressionSpec extends AnyFunSuite {
     import spark.implicits._
     // the native update hashes UTF8String bytes directly (no per-row
     // java.lang.String); hashString is defined as the hash of the UTF-8
-    // encoding, so sketches must stay byte-identical to the kryo String
+    // encoding, so sketches must stay byte-identical to the String
     // path on every UTF-8 shape: 1-byte ASCII, 2-byte (é), 3-byte (CJK),
     // and 4-byte supplementary characters (surrogate pairs in the String)
     val texts = Seq(
@@ -339,14 +325,17 @@ class ExpressionSpec extends AnyFunSuite {
       .toDF("s", "wi")
     def b(c: org.apache.spark.sql.Column): Array[Byte] =
       df.agg(c).collect()(0).getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(
-      b(graft.spark.expressions.HllSketchAgg(col("s"), 12)),
-      b(functions.hll_sketch(col("s"), 12))))
-    assert(java.util.Arrays.equals(
-      b(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 512)),
-      b(functions.cms_sketch(col("s"), 5, 512))))
+    val rows = df.collect().map(r => (r.getString(0), r.getInt(1)))
+    val hll = graft.sketches.Hll(12)
+    val cms = graft.sketches.CountMin(5, 512)
+    val weightedCms = graft.sketches.CountMin(5, 512)
+    rows.foreach { case (s, w) =>
+      hll.addString(s); cms.addString(s); weightedCms.addString(s, w.toLong)
+    }
+    assert(java.util.Arrays.equals(b(functions.hll_sketch(col("s"), 12)), hll.toBytes))
+    assert(java.util.Arrays.equals(b(functions.cms_sketch(col("s"), 5, 512)), cms.toBytes))
     // malformed UTF-8 (unreachable via well-formed sources, but parquet
-    // bytes are not validated): the hash must match what the kryo String
+    // bytes are not validated): the hash must match what the String
     // path computes after toString's U+FFFD replacement
     for (bad <- Seq(Array(0x80.toByte), Array('a'.toByte, 0xC3.toByte),
         Array(0xED.toByte, 0xA0.toByte, 0x80.toByte))) {
@@ -357,36 +346,43 @@ class ExpressionSpec extends AnyFunSuite {
 
     // weighted CMS with a RAW IntegerType weight child (no Cast wrapper —
     // the direct case-class construction advice-r6 flagged as an
-    // asInstanceOf[Long] ClassCastException) must equal the kryo path fed
+    // asInstanceOf[Long] ClassCastException) must equal the String path fed
     // the same weights as longs
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val rawIntWeight = ColumnBridge.column(
       graft.spark.expressions.CountMinWeightedSketchAgg(
         ColumnBridge.expression(col("s")), ColumnBridge.expression(col("wi")),
         5, 512).toAggregateExpression())
+    assert(java.util.Arrays.equals(b(rawIntWeight), weightedCms.toBytes))
     assert(java.util.Arrays.equals(
-      b(rawIntWeight),
-      b(functions.cms_sketch_weighted(col("s"), col("wi").cast("long"), 5, 512))))
+      b(functions.cms_sketch_weighted(col("s"), col("wi"), 5, 512)), weightedCms.toBytes))
   }
 
   test("compact shuffle buffers: grouped native companion sketches stay " +
-    "byte-identical to the kryo aggregators at high group cardinality") {
+    "byte-identical to in-process sketches at high group cardinality") {
     import spark.implicits._
     // 300 groups x 4 partitions: every group's partial buffer crosses the
     // shuffle in the compact (sparse/varint) form and must merge to the
-    // exact same dense result bytes the kryo path produces
+    // exact same dense result bytes as one in-process sketch per group
     val rnd = new java.util.SplittableRandom(9L)
     val rows = (0 until 6000).map { i => (i % 300, s"it_${rnd.nextInt(200)}", i.toLong) }
     val df = rows.toDF("g", "s", "id").repartition(4)
     def collectMap(c: org.apache.spark.sql.Column): Map[Int, Seq[Byte]] =
       df.groupBy(col("g")).agg(c.as("sk")).collect()
         .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(collectMap(graft.spark.expressions.HllSketchAgg(col("id"), 14)) ==
-      collectMap(functions.hll_sketch_long(col("id"), 14)))
-    assert(collectMap(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 2048)) ==
-      collectMap(functions.cms_sketch(col("s"), 5, 2048)))
-    assert(collectMap(graft.spark.expressions.BloomSketchAgg(col("id"), 100000, 0.01)) ==
-      collectMap(functions.bloom_sketch(col("id"), 100000, 0.01)))
+    def kernelMap[S](mk: => S)(add: (S, (Int, String, Long)) => Unit)(
+        bytes: S => Array[Byte]): Map[Int, Seq[Byte]] =
+      rows.groupBy(_._1).map { case (g, rs) =>
+        val s = mk
+        rs.foreach(add(s, _))
+        g -> bytes(s).toSeq
+      }
+    assert(collectMap(functions.hll_sketch_long(col("id"), 14)) ==
+      kernelMap(graft.sketches.Hll(14))((h, r) => h.addLong(r._3))(_.toBytes))
+    assert(collectMap(functions.cms_sketch(col("s"), 5, 2048)) ==
+      kernelMap(graft.sketches.CountMin(5, 2048))((c, r) => c.addString(r._2))(_.toBytes))
+    assert(collectMap(functions.bloom_sketch(col("id"), 100000, 0.01)) ==
+      kernelMap(graft.sketches.BloomFilter(100000, 0.01))((f, r) => f.addLong(r._3))(_.toBytes))
   }
 
   test("native binary sketch aggregates survive the sort-based fallback byte-identically") {
@@ -403,13 +399,13 @@ class ExpressionSpec extends AnyFunSuite {
     def run(): (Map[Int, Seq[Byte]], Map[Int, Seq[Byte]]) = {
       val plain = df
         .groupBy(col("g"))
-        .agg(hist_sketch_binary(col("v"), layout).as("sk"))
+        .agg(hist_sketch(col("v"), layout).as("sk"))
         .collect()
         .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq)
         .toMap
       val weighted = df
         .groupBy(col("g"))
-        .agg(hist_sketch_weighted_binary(col("v"), col("w"), layout).as("sk"))
+        .agg(hist_sketch_weighted(col("v"), col("w"), layout).as("sk"))
         .collect()
         .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq)
         .toMap
@@ -521,9 +517,9 @@ class ExpressionSpec extends AnyFunSuite {
     def dslBytes(c: org.apache.spark.sql.Column): Array[Byte] =
       df.agg(c).collect()(0).getAs[Array[Byte]](0)
 
-    // deterministic formats: native SQL builder with explicit parameters is
-    // byte-identical to the kryo Aggregator DSL (HLL register-max, CMS
-    // counter-add, Bloom bit-OR are order-insensitive)
+    // deterministic formats: the SQL builder with explicit parameters is
+    // byte-identical to the Column DSL (HLL register-max, CMS counter-add,
+    // Bloom bit-OR are order-insensitive)
     assert(java.util.Arrays.equals(
       bytes("SELECT hll_sketch(s, 12) FROM sql_comp"),
       dslBytes(functions.hll_sketch(col("s"), 12))))
@@ -536,8 +532,8 @@ class ExpressionSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(
       bytes("SELECT bloom_sketch(id, 10000, 0.01) FROM sql_comp"),
       dslBytes(functions.bloom_sketch(col("id"), 10000L, 0.01))))
-    // long input through the native HLL (unboxed ordinal path) matches the
-    // long-typed DSL aggregator
+    // long input through the SQL HLL (unboxed ordinal path) matches the
+    // long-typed DSL aggregate
     assert(java.util.Arrays.equals(
       bytes("SELECT hll_sketch(id, 12) FROM sql_comp"),
       dslBytes(functions.hll_sketch_long(col("id"), 12))))

@@ -76,16 +76,46 @@ class PlanAndParitySpec extends AnyFunSuite {
     // two ObjectHashAggregate occurrences = map-side partial + final
     val n = "ObjectHashAggregate".r.findAllIn(plan).size
     assert(n >= 2, s"expected partial+final object hash aggregate, plan:\n$plan")
-    // the native TypedImperativeAggregate variant plans identically
-    val planBin = li
-      .groupBy(col("l_returnflag"))
-      .agg(hist_sketch_binary(col("l_extendedprice"), layout))
-      .queryExecution
-      .executedPlan
-      .toString
-    val nBin = "ObjectHashAggregate".r.findAllIn(planBin).size
-    assert(nBin >= 2, s"native agg lost partial+final, plan:\n$planBin")
-    assert(planBin.contains("partial_hist_sketch_binary"), s"no partial phase:\n$planBin")
+    assert(plan.contains("partial_hist_sketch("), s"no partial phase:\n$plan")
+    // every aggregate name, through the DSL and through SQL registerAll,
+    // plans as a partial and a final phase of one of the library's native
+    // aggregates (no kryo ScalaAggregator)
+    registerAll(spark)
+    val df = spark.range(100).select(
+      (col("id") % 3).as("g"), col("id").cast("double").as("v"), col("id").as("w"),
+      col("id").cast("string").as("s"), col("id").cast("string").cast("binary").as("b"))
+    df.createOrReplaceTempView("plan_guard")
+    val dsl = Seq(
+      hist_sketch(col("v"), layout), hist_sketch_packed(col("v"), layout),
+      hist_sketch_weighted(col("v"), col("w"), layout),
+      hll_sketch(col("s")), hll_sketch_long(col("w")), cms_sketch(col("s")),
+      cms_sketch_weighted(col("s"), col("w")), bloom_sketch(col("w"), 1000),
+      tdigest_sketch(col("v")), kll_sketch(col("v")),
+      hist_merge(col("b")), hll_merge(col("b")), cms_merge(col("b")),
+      bloom_merge(col("b")), tdigest_merge(col("b")), kll_merge(col("b")))
+      .map(c => c.toString -> df.groupBy(col("g")).agg(c))
+    val sql = Seq(
+      "hist_sketch(v)", "hist_sketch_weighted(v, w)",
+      "hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6)",
+      "hist_sketch_packed_custom(v, 10.0, 50.0)", "hist_sketch_weighted_custom(v, w, 10.0)",
+      "hll_sketch(s)", "cms_sketch(s)", "cms_sketch_weighted(s, w)", "bloom_sketch(w, 1000)",
+      "tdigest_sketch(v)", "kll_sketch(v)", "hist_merge(b)", "hll_merge(b)", "cms_merge(b)",
+      "bloom_merge(b)", "tdigest_merge(b)", "kll_merge(b)")
+      .map(q => q -> spark.sql(s"SELECT g, $q FROM plan_guard GROUP BY g"))
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    (dsl ++ sql).foreach { case (name, q) =>
+      val physical = q.queryExecution.sparkPlan
+      val aggs = physical.collect { case a: ObjectHashAggregateExec => a.aggregateExpressions }
+        .flatten
+      assert(aggs.exists(_.mode == Partial) && aggs.exists(_.mode == Final),
+        s"$name: expected partial + final ObjectHashAggregate:\n$physical")
+      aggs.map(_.aggregateFunction).foreach { f =>
+        assert(f.getClass.getName.startsWith("graft.spark.expressions."),
+          s"$name: plans ${f.getClass.getName}, not a native sketch aggregate:\n$physical")
+      }
+      assert(!physical.toString.contains("ScalaAggregator"), s"$name:\n$physical")
+    }
   }
 
   test("HLL accuracy is in the same class as approx_count_distinct (HLL++)") {
