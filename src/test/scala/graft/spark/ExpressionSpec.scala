@@ -76,7 +76,7 @@ class ExpressionSpec extends AnyFunSuite {
     "and shuffles compact V1 buffers") {
     // every unweighted histogram builder name, DSL and SQL, at 1 and 8
     // partitions, against the bytes the former kryo Aggregator produced
-    AggGolden.check(spark, n => n.startsWith("dsl.hist_sketch") || n.startsWith("sql.hist_sketch"))
+    AggGolden.check(spark, n => n.contains(".hist_sketch") && !n.contains("weighted"))
     // the aggregation buffer is the compact V1 payload, far smaller than
     // the 8-byte-per-bin counter array
     val rnd = new java.util.SplittableRandom(12L)
