@@ -9,9 +9,11 @@ import graft.core._
  * reciprocal (log-uniform) distribution on [1e3, 1e12] (`Constants.java:
  * 19-21`: MIN=1000, RANGE=1e9), pre-generated in memory, recorded into a
  * fresh histogram per round; layouts configured at absolute error 10,
- * relative 1% over [0, 1e12]. Reports min-of-rounds ns/value for the plain
- * 64-bit ("static-class") buffer and the packed adaptive-width buffer, plus
- * resident buffer footprints and a high-group-cardinality memory comparison.
+ * relative 1% over [0, 1e12]. Reports min-of-rounds ns/value for the
+ * preallocated 64-bit buffer (`Histogram.static`, the reference's
+ * StaticHistogram) and the self-sizing buffer (`Histogram(layout)`, the
+ * reference's DynamicHistogram), their resident footprints, and the
+ * per-group footprint of the self-sizing buffer at high group cardinality.
  *
  * Run: `sbt -batch "runMain graft.RecordingSpeed"`.
  */
@@ -57,17 +59,14 @@ object RecordingSpeed {
     layouts.foreach { case (name, mkLayout) =>
       val layout = mkLayout()
       val (nsStatic, hStatic) = timeNsPerValue(values, () => Histogram.static(layout))
-      val (nsPlain, hPlain) = timeNsPerValue(values, () => Histogram(layout))
-      val (nsPacked, hPacked) = timeNsPerValue(values, () => Histogram.packed(layout))
-      require(hPlain == hPacked && hPlain == hStatic, s"$name: buffer variants disagree")
-      println(f"$name%-18s ${"static"}%-8s $nsStatic%10.2f ${hStatic.estimatedFootprintBytes}%12d")
-      println(f"$name%-18s ${"plain"}%-8s $nsPlain%10.2f ${hPlain.estimatedFootprintBytes}%12d")
-      println(f"$name%-18s ${"packed"}%-8s $nsPacked%10.2f ${hPacked.estimatedFootprintBytes}%12d")
-      results(s"${name}_static_ns") = nsStatic
-      results(s"${name}_plain_ns") = nsPlain
-      results(s"${name}_packed_ns") = nsPacked
-      results(s"${name}_plain_bytes") = hPlain.estimatedFootprintBytes.toDouble
-      results(s"${name}_packed_bytes") = hPacked.estimatedFootprintBytes.toDouble
+      val (nsDynamic, hDynamic) = timeNsPerValue(values, () => Histogram(layout))
+      require(hDynamic == hStatic, s"$name: static and dynamic buffers disagree")
+      Seq("static" -> (nsStatic, hStatic), "dynamic" -> (nsDynamic, hDynamic)).foreach {
+        case (buffer, (ns, h)) =>
+          println(f"$name%-18s $buffer%-8s $ns%10.2f ${h.estimatedFootprintBytes}%12d")
+          results(s"${name}_${buffer}_ns") = ns
+          results(s"${name}_${buffer}_bytes") = h.estimatedFootprintBytes.toDouble
+      }
     }
 
     // high-group-cardinality memory: 10^6 sparse per-group buffers (the
@@ -75,26 +74,19 @@ object RecordingSpeed {
     val layout = LogQuadraticLayout(10, 0.01, 0, 1e12)
     val rnd = new java.util.SplittableRandom(7L)
     val lnRange = math.log(1e9)
-    def groupBytes(mk: () => Histogram): Double = {
-      var total = 0L
-      var g = 0
-      val groups = 1000000
-      while (g < groups) {
-        val h = mk()
-        var i = 0
-        while (i < 20) { h.addValue(1000.0 * math.exp(rnd.nextDouble() * lnRange)); i += 1 }
-        total += h.estimatedFootprintBytes
-        g += 1
-      }
-      total.toDouble / groups
+    val groups = 1000000
+    var total = 0L
+    var g = 0
+    while (g < groups) {
+      val h = Histogram(layout)
+      var i = 0
+      while (i < 20) { h.addValue(1000.0 * math.exp(rnd.nextDouble() * lnRange)); i += 1 }
+      total += h.estimatedFootprintBytes
+      g += 1
     }
-    val plainPerGroup = groupBytes(() => Histogram(layout))
-    val packedPerGroup = groupBytes(() => Histogram.packed(layout))
-    println(f"per-group buffer bytes at 10^6 groups x 20 values: " +
-      f"plain=$plainPerGroup%.1f packed=$packedPerGroup%.1f " +
-      f"(${plainPerGroup / packedPerGroup}%.1fx smaller)")
-    results("group_buffer_plain_bytes") = plainPerGroup
-    results("group_buffer_packed_bytes") = packedPerGroup
+    val perGroup = total.toDouble / groups
+    println(f"per-group buffer bytes at 10^6 groups x 20 values: dynamic=$perGroup%.1f")
+    results("group_buffer_dynamic_bytes") = perGroup
 
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     val json = results.map { case (k, v) =>

@@ -225,7 +225,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // 1. CustomLayout bin counts, exploded — exact, SQL-checkable bin by bin.
     //    hist_sketch is a native TypedImperativeAggregate: V1-format
-    //    shuffle buffers + unboxed update; q20 covers the packed buffer.
+    //    shuffle buffers + unboxed update.
     "q01_hist_custom_bins" -> { (s, dir) =>
       table(s, dir, "lineitem")
         .agg(hist_sketch(col("l_extendedprice"), priceLayout).as("sk"))
@@ -736,13 +736,10 @@ object SparkEntry {
     // 20. OpenTelemetry exponential-buckets layout: exploded bin counts,
     //     re-counted by the oracle against the layout's own exact bin
     //     boundaries (verifies the OTel mapping + bound inversion end-to-end).
-    //     Aggregated with the PACKED adaptive-width counter buffer, so the
-    //     mode-0..6 packing is exercised by a driver oracle too (the output
-    //     envelope bytes are identical to the plain buffer by construction).
     "q20_otel_bins" -> { (s, dir) =>
       val layout = OtelExponentialLayout(4)
       table(s, dir, "lineitem")
-        .agg(hist_sketch_packed(col("l_quantity"), layout).as("sk"))
+        .agg(hist_sketch(col("l_quantity"), layout).as("sk"))
         .select(explode(hist_bins(col("sk"))).as("b"))
         .select(col("b.bin_index").as("bin_index"), col("b.cnt").as("cnt"))
     },
@@ -1229,9 +1226,7 @@ object SparkEntry {
     //     path a SQL-only user hits first. Per-source doc-length bin counts
     //     are re-derived exactly by the oracle from the same boundaries; the
     //     ok-conjunction pins total/min/max to exact SQL aggregates and the
-    //     re-binned total to the row count, and asserts the packed-counter
-    //     SQL builder (hist_sketch_packed_custom) byte-equal to the plain
-    //     one — packing changes buffer representation, not results.
+    //     re-binned total to the row count.
     "q33_sql_surface" -> { (s, dir) =>
       graft.spark.functions.registerAll(s)
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")
@@ -1240,9 +1235,7 @@ object SparkEntry {
         s"""WITH d AS (
            |  SELECT source, CAST(length(text) AS DOUBLE) AS v FROM graft_documents),
            |skt AS (
-           |  SELECT source, hist_sketch_custom(v, $bounds) AS sk,
-           |         hist_sketch_packed_custom(v, $bounds) AS skp
-           |  FROM d GROUP BY source),
+           |  SELECT source, hist_sketch_custom(v, $bounds) AS sk FROM d GROUP BY source),
            |ex AS (
            |  SELECT source, count(*) AS n, min(v) AS mn, max(v) AS mx FROM d GROUP BY source)
            |SELECT skt.source AS source, b.bin_index AS bin_index, b.cnt AS cnt,
@@ -1251,7 +1244,6 @@ object SparkEntry {
            |        hist_max(skt.sk) = ex.mx AND
            |        hist_quantile(skt.sk, 0.0) = ex.mn AND
            |        hist_quantile(skt.sk, 1.0) = ex.mx AND
-           |        skt.sk = skt.skp AND
            |        hist_total(hist_rebin_custom(skt.sk, 0.0, 200.0, 800.0)) = ex.n) AS ok
            |FROM skt JOIN ex ON skt.source = ex.source
            |LATERAL VIEW explode(hist_bins(skt.sk)) t AS b""".stripMargin)
@@ -1427,7 +1419,7 @@ object SparkEntry {
             .foreachBatch { (df: DataFrame, _: Long) =>
               val obs = org.apache.spark.sql.Observation()
               df.observe(obs, count(lit(1)).as("n")).write.mode("append").parquet(out)
-              emitted.addAndGet(obs.get("n").asInstanceOf[Long])
+              emitted.addAndGet(graft.streaming.StreamingSketch.observedCount(obs.get, "n"))
               ()
             }
             .start()
@@ -1493,7 +1485,7 @@ object SparkEntry {
             .foreachBatch { (df: DataFrame, _: Long) =>
               val obs = org.apache.spark.sql.Observation()
               df.observe(obs, count(lit(1)).as("n")).write.mode("append").parquet(out)
-              emitted.addAndGet(obs.get("n").asInstanceOf[Long])
+              emitted.addAndGet(graft.streaming.StreamingSketch.observedCount(obs.get, "n"))
               ()
             }
             .start()

@@ -55,7 +55,7 @@ object ValueEstimator {
  * `mstats.mquantiles` plotting-position interpolation, default
  * alphap = betap = 0.4.
  */
-final class QuantileEstimator private (alphap: Double, betap: Double) extends Serializable {
+final case class QuantileEstimator private (alphap: Double, betap: Double) {
   require(alphap >= 0 && alphap <= 1 && betap >= 0 && betap <= 1)
 
   def estimate(p: Double, sortedValueAt: Long => Double, numValues: Long): Double = {

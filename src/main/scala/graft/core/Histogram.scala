@@ -3,8 +3,8 @@ package graft.core
 /**
  * Mutable error-bounded histogram sketch over IEEE-754 doubles.
  *
- * State: a dense window of 64-bit counters over the regular bin-index range
- * actually touched, plus exact underflow/overflow/total counts and exact
+ * State: a dense window of self-sizing counters over the regular bin-index
+ * range actually touched, plus exact underflow/overflow/total counts and exact
  * min/max (signed zero respected). Recording is O(1); merge of equal-layout
  * histograms is bin-wise counter addition and therefore associative and
  * commutative — the property that makes this a valid distributed aggregation
@@ -17,20 +17,21 @@ package graft.core
  * raises ArithmeticException, -0.0 ordered below 0.0 for min/max, window grown
  * geometrically by >= 25%.
  */
-final class Histogram private (val layout: Layout, packedCounters: Boolean)
-    extends Serializable {
+final class Histogram private (val layout: Layout) extends Serializable {
 
   // Regular-bin counter storage: a dense window of `windowLen` counters
-  // starting at bin index `windowStart`. With `packedCounters` the counters
-  // are bit-packed at 2^mode bits each and the width class upgrades on
-  // demand, mode 0..6 (reference semantics dynahist `DynamicHistogram.java:
-  // 30-75, 152-221`) — up to 64x smaller resident buffers at low per-bin
-  // counts. Without it the mode is pinned to 6 (plain 64-bit counters, the
-  // reference's StaticHistogram-style buffer — fastest recording).
+  // starting at bin index `windowStart`, bit-packed at 2^mode bits each.
+  // Counters start at 1 bit (mode 0) and widen on demand to 2, 4 and 8 bits
+  // (reference semantics dynahist `DynamicHistogram.java:30-75, 152-221`), so
+  // sparse per-group buffers stay up to 64x smaller than plain counters. A
+  // counter past 255 moves the window straight to plain 64-bit counters
+  // (mode 6, the reference's StaticHistogram-style buffer): such a buffer has
+  // seen at least 256 values, so it is one of the few heavy buffers where
+  // recording speed matters.
   private var counts: Array[Long] = Histogram.EmptyCounts
   private var windowStart: Int = 0 // bin index of counter 0; meaningful iff windowLen > 0
   private var windowLen: Int = 0
-  private var mode: Int = if (packedCounters) 0 else 6
+  private var mode: Int = 0
 
   private var underflowCountVar: Long = 0L
   private var overflowCountVar: Long = 0L
@@ -106,16 +107,30 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     }
   }
 
-  /** Adds `delta` to the counter at `pos`, upgrading the counter bit-width
-   * class when the new value no longer fits (reference
-   * `DynamicHistogram.java:152-221`). */
+  /** Adds `delta` to the counter at `pos`, widening the counters when the
+   * new value no longer fits (reference `DynamicHistogram.java:152-221`). */
   private def addToCounterAt(pos: Int, delta: Long): Unit = {
-    val updated = counterAt(pos) + delta
-    if (updated < 0) throw new ArithmeticException("counter overflow")
-    if (mode < 6 && updated > Histogram.ModeMask(mode)) {
+    if (mode == 6) {
+      val updated = counts(pos) + delta
+      if (updated < 0) throw new ArithmeticException("counter overflow")
+      counts(pos) = updated
+    } else addToPackedCounterAt(pos, delta)
+  }
+
+  private def addToPackedCounterAt(pos: Int, delta: Long): Unit = {
+    val bitPos = pos.toLong << mode
+    val w = (bitPos >>> 6).toInt
+    val s = (bitPos & 63L).toInt
+    val mask = Histogram.ModeMask(mode)
+    val word = counts(w)
+    val updated = ((word >>> s) & mask) + delta
+    // in place while the sum fits the field (no carry out of it)
+    if ((updated & ~mask) == 0L) counts(w) = word + (delta << s)
+    else {
+      if (updated < 0) throw new ArithmeticException("counter overflow")
       upgradeMode(Histogram.modeFor(updated))
+      setCounterAt(pos, updated)
     }
-    setCounterAt(pos, updated)
   }
 
   private def upgradeMode(newMode: Int): Unit = {
@@ -170,16 +185,17 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     }
     val newLen = newEnd - newStart
     val fresh = new Array[Long](wordsFor(newLen, mode))
-    val off = curStart - newStart
-    if (mode == 6) System.arraycopy(counts, 0, fresh, off, windowLen)
+    // move the counter bits up by `off` counters, a whole word at a time
+    // (bits past windowLen are zero, so shifted-out bits are zero too)
+    val offBits = (curStart - newStart).toLong << mode
+    val wordOff = (offBits >>> 6).toInt
+    val bitOff = (offBits & 63L).toInt
+    if (bitOff == 0) System.arraycopy(counts, 0, fresh, wordOff, counts.length)
     else {
       var i = 0
-      while (i < windowLen) {
-        val v = counterAt(i)
-        if (v != 0L) {
-          val bitPos = (i + off).toLong << mode
-          fresh((bitPos >>> 6).toInt) |= (v << (bitPos & 63L).toInt)
-        }
+      while (i < counts.length) {
+        fresh(wordOff + i) |= counts(i) << bitOff
+        if (wordOff + i + 1 < fresh.length) fresh(wordOff + i + 1) |= counts(i) >>> (64 - bitOff)
         i += 1
       }
     }
@@ -499,17 +515,18 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     s"Histogram(layout=$layout, total=$totalCountVar, min=$minVar, max=$maxVar, " +
       s"underflow=$underflowCountVar, overflow=$overflowCountVar)"
 
-  /** Rough in-memory footprint: counter window (packed or plain words) +
-   * fixed fields. */
+  /** Rough in-memory footprint: counter window words + fixed fields. */
   def estimatedFootprintBytes: Long =
     16L + counts.length.toLong * 8L + 4L + 3L * 8L + 2L * 8L
 
-  /** Current counter bit-width class: 2^mode bits per regular counter
-   * (always 6 for the plain-long buffer). */
+  /** Current counter width class: 2^mode bits per regular counter — 0 to 3
+   * (1 to 8 bits), or 6 for plain 64-bit counters. */
   def counterMode: Int = mode
 
-  private[core] def preallocateFullRange(): Unit =
+  private def preallocateFullRange(): Unit = {
+    mode = 6
     ensureWindow(layout.underflowBinIndex + 1, layout.overflowBinIndex - 1)
+  }
 
   // internal accessors for serde and preprocessing
   private[core] def regularWindowStart: Int = windowStart
@@ -523,25 +540,19 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       total: Long,
       newMin: Double,
       newMax: Double): Unit = {
-    if (packedCounters) {
-      var mask = 0L
-      newCounts.foreach(c => mask |= c)
-      mode = Histogram.modeFor(mask)
-      windowLen = newCounts.length
-      if (mode == 6) counts = newCounts
-      else {
-        counts = new Array[Long](wordsFor(windowLen, mode))
-        var i = 0
-        while (i < windowLen) {
-          val v = newCounts(i)
-          if (v != 0L) setCounterAt(i, v)
-          i += 1
-        }
+    var mask = 0L
+    newCounts.foreach(c => mask |= c)
+    mode = Histogram.modeFor(mask)
+    windowLen = newCounts.length
+    if (mode == 6) counts = newCounts
+    else {
+      counts = new Array[Long](wordsFor(windowLen, mode))
+      var i = 0
+      while (i < windowLen) {
+        val v = newCounts(i)
+        if (v != 0L) setCounterAt(i, v)
+        i += 1
       }
-    } else {
-      counts = newCounts
-      windowLen = newCounts.length
-      mode = 6
     }
     windowStart = newWindowStart
     underflowCountVar = underflow
@@ -555,45 +566,37 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
 object Histogram {
   private val EmptyCounts = new Array[Long](0)
 
-  /** Largest counter value representable at each mode (2^(2^m) - 1). */
+  /** Largest counter value representable at each mode (2^(2^m) - 1); modes
+   * 4 and 5 are never used. */
   private[core] val ModeMask: Array[Long] =
     Array(1L, 3L, 0xfL, 0xffL, 0xffffL, 0xffffffffL, -1L)
 
-  /** Smallest mode whose counter width fits `v` (also valid on a bit-OR mask
-   * of counters — the reference's requiredMode, `AbstractHistogram.java`). */
+  /** Narrowest counter width that holds `v` (also valid on a bit-OR mask of
+   * counters): 1, 2, 4 or 8 bits (modes 0-3), else plain 64 bits (mode 6). */
   private[core] def modeFor(v: Long): Int =
-    if (v >= 0 && v <= 1L) 0
-    else if (v <= 3L && v >= 0) 1
-    else if (v <= 0xfL && v >= 0) 2
-    else if (v <= 0xffL && v >= 0) 3
-    else if (v <= 0xffffL && v >= 0) 4
-    else if (v <= 0xffffffffL && v >= 0) 5
-    else 6
+    if ((v >>> 8) != 0L) 6
+    else if (v > 0xfL) 3
+    else if (v > 3L) 2
+    else if (v > 1L) 1
+    else 0
 
-  /** Plain 64-bit counter window — fastest recording (StaticHistogram-class
-   * buffer, dynahist `StaticHistogram.java:26-66`). */
-  def apply(layout: Layout): Histogram = new Histogram(layout, packedCounters = false)
+  /** Self-sizing counter buffer: 1-bit counters widened on demand to 2, 4, 8
+   * and then 64 bits (dynahist `DynamicHistogram.java:30-75, 152-221`). */
+  def apply(layout: Layout): Histogram = new Histogram(layout)
 
-  /** Preallocated plain counter buffer over the layout's ENTIRE regular bin
-   * range (dynahist `StaticHistogram.java:26-66`): recording never checks or
-   * grows the window, trading memory (8 bytes x regularBinCount up front)
-   * for the reference's fastest recording path. Only sensible for layouts
-   * with a bounded regular range. */
+  /** The same buffer preallocated over the layout's ENTIRE regular bin range
+   * at plain 64-bit counters (dynahist `StaticHistogram.java:26-66`):
+   * recording never grows the window or widens a counter, trading memory
+   * (8 bytes x regularBinCount up front) for the reference's fastest
+   * recording path. Only sensible for layouts with a bounded regular range. */
   def static(layout: Layout): Histogram = {
     require(
       layout.regularBinCount <= Int.MaxValue / 8,
       s"regular bin range too large to preallocate: ${layout.regularBinCount}")
-    val h = new Histogram(layout, packedCounters = false)
+    val h = new Histogram(layout)
     h.preallocateFullRange()
     h
   }
-
-  /** Adaptive bit-width counter buffer: 2^mode bits per counter, mode grows
-   * 0..6 on demand (dynahist `DynamicHistogram.java:30-75, 152-221`) — up to
-   * 64x smaller resident buffers at low per-bin counts, identical observable
-   * behavior. Prefer for very high group cardinality aggregations where
-   * millions of per-group buffers are resident at once. */
-  def packed(layout: Layout): Histogram = new Histogram(layout, packedCounters = true)
 }
 
 /** Immutable snapshot of one histogram bin. */

@@ -60,11 +60,13 @@ object GraftExtensions {
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
+  /** Builds a SQL function's expression from its argument expressions. */
+  private[spark] type Builder = Seq[Expression] => Expression
+
   /** Wraps a builder with a proper wrong-number-of-arguments error (raw
    * args(i) indexing would throw an opaque IndexOutOfBoundsException during
    * analysis). */
-  private def expectArgs(fn: String, n: Int, atLeast: Boolean = false)(
-      b: Seq[Expression] => Expression): Seq[Expression] => Expression =
+  private def expectArgs(fn: String, n: Int, atLeast: Boolean = false)(b: Builder): Builder =
     args => {
       val ok = if (atLeast) args.length >= n else args.length == n
       if (!ok) {
@@ -118,38 +120,64 @@ object GraftExtensions {
     }
   }
 
-  private def sketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchAgg(Cast(args.head, DoubleType), mkLayout(args.tail))
-      .toAggregateExpression()
+  /** Layout literals of one SQL name suffix: how many there are (at least
+   * that many when `variadic`) and how to build the layout from them. */
+  private final case class LayoutSuffix(
+      params: Int,
+      variadic: Boolean,
+      parse: (String, Seq[Expression]) => Layout)
 
-  private def packedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchAgg(
-      Cast(args.head, DoubleType), mkLayout(args.tail), packed = true)
-      .toAggregateExpression()
+  private def errorLimited(mk: (Double, Double, Double, Double) => Layout): LayoutSuffix =
+    LayoutSuffix(4, variadic = false, (fn, a) => {
+      val d = a.map(litDouble(fn, _))
+      mk(d(0), d(1), d(2), d(3))
+    })
 
-  /** (value, weight, layout params...) — the count-weighted native aggregate
-   * (reference `addValue(double, long)`, Histogram.java:283-290). */
-  private def weightedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchWeightedAgg(
-      Cast(args(0), DoubleType),
-      Cast(args(1), LongType),
-      mkLayout(args.drop(2)))
+  /** Layout literals by SQL name suffix: (absolute error, relative error,
+   * min, max) for the error-limiting layouts, the OTel scale, or the custom
+   * bin boundaries. */
+  private val layoutSuffixes: Map[String, LayoutSuffix] = Map(
+    "log_quadratic" -> errorLimited(LogQuadraticLayout(_, _, _, _)),
+    "log_linear" -> errorLimited(LogLinearLayout(_, _, _, _)),
+    "log_optimal" -> errorLimited(LogOptimalLayout(_, _, _, _)),
+    "otel" -> LayoutSuffix(
+      1, variadic = false, (fn, a) => OtelExponentialLayout(litInt(fn, a.head))),
+    "custom" -> LayoutSuffix(
+      1, variadic = true, (fn, a) => CustomLayout(a.map(litDouble(fn, _)).toArray)))
+
+  private val AllSuffixes = Seq("log_quadratic", "log_linear", "log_optimal", "otel", "custom")
+
+  /** Builders `family_suffix` for each listed suffix: the first `lead`
+   * arguments go to `build` as they are, the rest are the layout literals. */
+  private def withLayout(family: String, lead: Int, suffixes: String*)(
+      build: (Seq[Expression], Layout) => Expression): Seq[(String, Builder)] =
+    suffixes.map { suffix =>
+      val fn = s"${family}_$suffix"
+      val l = layoutSuffixes(suffix)
+      fn -> expectArgs(fn, lead + l.params, atLeast = l.variadic)(args =>
+        build(args.take(lead), l.parse(fn, args.drop(lead))))
+    }
+
+  private def sketchAgg(args: Seq[Expression], layout: Layout): Expression =
+    HistogramSketchAgg(Cast(args.head, DoubleType), layout).toAggregateExpression()
+
+  /** (value, weight) — the count-weighted native aggregate (reference
+   * `addValue(double, long)`, Histogram.java:283-290). */
+  private def weightedSketchAgg(args: Seq[Expression], layout: Layout): Expression =
+    HistogramSketchWeightedAgg(Cast(args(0), DoubleType), Cast(args(1), LongType), layout)
       .toAggregateExpression()
 
   /** Layout of the parameterless SQL `hist_sketch` / `hist_sketch_weighted`. */
   private val DefaultSqlLayout: Layout = LogQuadraticLayout(1e-8, 1e-2, -1e9, 1e9)
 
-  private def mergeAgg(codec: SketchCodec[_ <: AnyRef]): (String, Seq[Expression] => Expression) = {
+  private def mergeAgg(codec: SketchCodec[_ <: AnyRef]): (String, Builder) = {
     val fn = s"${codec.family}_merge"
     fn -> expectArgs(fn, 1)(args => SketchMergeAgg(args.head, codec).toAggregateExpression())
   }
 
   /** Expression builders shared by `injectFunction` (new sessions) and
    * [[functions.registerAll]] (existing sessions). */
-  private[spark] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[spark] val nativeBuilders: Seq[(String, Builder)] = Seq[(String, Builder)](
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
     // hist_value_at_rank takes (sk, rank[, estimator]).
@@ -158,11 +186,12 @@ object GraftExtensions {
         case 2 => HistQuantile(args(0), Cast(args(1), DoubleType))
         case 4 | 5 =>
           val est = if (args.length == 5) litString("hist_quantile", args(4)) else "uniform"
-          HistQuantileParam(
+          HistQuantile(
             args(0),
             Cast(args(1), DoubleType),
-            litDouble("hist_quantile", args(2)),
-            litDouble("hist_quantile", args(3)),
+            QuantileEstimator(
+              litDouble("hist_quantile", args(2)),
+              litDouble("hist_quantile", args(3))),
             HistParamEval.estimator(est))
         case n => throw new IllegalArgumentException(
           s"hist_quantile expects 2, 4 or 5 arguments, got $n")
@@ -171,7 +200,7 @@ object GraftExtensions {
     "hist_value_at_rank" -> { args =>
       args.length match {
         case 2 => HistValueAtRank(args(0), Cast(args(1), LongType))
-        case 3 => HistValueAtRankEst(
+        case 3 => HistValueAtRank(
           args(0),
           Cast(args(1), LongType),
           HistParamEval.estimator(litString("hist_value_at_rank", args(2))))
@@ -179,31 +208,7 @@ object GraftExtensions {
           s"hist_value_at_rank expects 2 or 3 arguments, got $n")
       }
     },
-    // sketch-rewriting scalars: cross-layout re-binning with layout literals
-    // and reference-blob migration (SQL-only users can reach them too)
-    "hist_rebin_log_quadratic" -> expectArgs("hist_rebin_log_quadratic", 5)(args =>
-      HistRebin(args(0), LogQuadraticLayout(
-        litDouble("hist_rebin_log_quadratic", args(1)),
-        litDouble("hist_rebin_log_quadratic", args(2)),
-        litDouble("hist_rebin_log_quadratic", args(3)),
-        litDouble("hist_rebin_log_quadratic", args(4))))),
-    "hist_rebin_log_linear" -> expectArgs("hist_rebin_log_linear", 5)(args =>
-      HistRebin(args(0), LogLinearLayout(
-        litDouble("hist_rebin_log_linear", args(1)),
-        litDouble("hist_rebin_log_linear", args(2)),
-        litDouble("hist_rebin_log_linear", args(3)),
-        litDouble("hist_rebin_log_linear", args(4))))),
-    "hist_rebin_log_optimal" -> expectArgs("hist_rebin_log_optimal", 5)(args =>
-      HistRebin(args(0), LogOptimalLayout(
-        litDouble("hist_rebin_log_optimal", args(1)),
-        litDouble("hist_rebin_log_optimal", args(2)),
-        litDouble("hist_rebin_log_optimal", args(3)),
-        litDouble("hist_rebin_log_optimal", args(4))))),
-    "hist_rebin_otel" -> expectArgs("hist_rebin_otel", 2)(args =>
-      HistRebin(args(0), OtelExponentialLayout(litInt("hist_rebin_otel", args(1))))),
-    "hist_rebin_custom" -> expectArgs("hist_rebin_custom", 2, atLeast = true)(args =>
-      HistRebin(args(0),
-        CustomLayout(args.tail.map(litDouble("hist_rebin_custom", _)).toArray))),
+    // reference-blob migration (SQL-only users can reach it too)
     "hist_from_reference" -> expectArgs("hist_from_reference", 1)(args =>
       HistFromReference(args(0))),
     "hist_to_reference" -> expectArgs("hist_to_reference", 1)(args =>
@@ -220,65 +225,10 @@ object GraftExtensions {
     "hist_overflow" -> expectArgs("hist_overflow", 1)(
       args => HistStat(args(0), HistStat.Overflow)),
     "hist_bins" -> expectArgs("hist_bins", 1)(args => HistBins(args(0))),
-    // histogram aggregates: the default-layout forms, then the
-    // layout-parameterized ones (value, layout params...)
-    "hist_sketch" -> expectArgs("hist_sketch", 1)(sketchAgg("hist_sketch", _ => DefaultSqlLayout)),
-    "hist_sketch_weighted" -> expectArgs("hist_sketch_weighted", 2)(
-      weightedSketchAgg("hist_sketch_weighted", _ => DefaultSqlLayout)),
-    "hist_sketch_log_quadratic" -> expectArgs("hist_sketch_log_quadratic", 5)(sketchAgg(
-      "hist_sketch_log_quadratic",
-      a => LogQuadraticLayout(
-        litDouble("hist_sketch_log_quadratic", a(0)),
-        litDouble("hist_sketch_log_quadratic", a(1)),
-        litDouble("hist_sketch_log_quadratic", a(2)),
-        litDouble("hist_sketch_log_quadratic", a(3))))),
-    "hist_sketch_log_linear" -> expectArgs("hist_sketch_log_linear", 5)(sketchAgg(
-      "hist_sketch_log_linear",
-      a => LogLinearLayout(
-        litDouble("hist_sketch_log_linear", a(0)),
-        litDouble("hist_sketch_log_linear", a(1)),
-        litDouble("hist_sketch_log_linear", a(2)),
-        litDouble("hist_sketch_log_linear", a(3))))),
-    "hist_sketch_log_optimal" -> expectArgs("hist_sketch_log_optimal", 5)(sketchAgg(
-      "hist_sketch_log_optimal",
-      a => LogOptimalLayout(
-        litDouble("hist_sketch_log_optimal", a(0)),
-        litDouble("hist_sketch_log_optimal", a(1)),
-        litDouble("hist_sketch_log_optimal", a(2)),
-        litDouble("hist_sketch_log_optimal", a(3))))),
-    "hist_sketch_otel" -> expectArgs("hist_sketch_otel", 2)(sketchAgg(
-      "hist_sketch_otel",
-      a => OtelExponentialLayout(litInt("hist_sketch_otel", a(0))))),
-    "hist_sketch_custom" -> expectArgs("hist_sketch_custom", 2, atLeast = true)(sketchAgg(
-      "hist_sketch_custom",
-      a => CustomLayout(a.map(litDouble("hist_sketch_custom", _)).toArray))),
-    // count-weighted variants: (value, weight, layout params...)
-    "hist_sketch_weighted_log_quadratic" ->
-      expectArgs("hist_sketch_weighted_log_quadratic", 6)(weightedSketchAgg(
-        "hist_sketch_weighted_log_quadratic",
-        a => LogQuadraticLayout(
-          litDouble("hist_sketch_weighted_log_quadratic", a(0)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(1)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(2)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(3))))),
-    "hist_sketch_weighted_custom" ->
-      expectArgs("hist_sketch_weighted_custom", 3, atLeast = true)(weightedSketchAgg(
-        "hist_sketch_weighted_custom",
-        a => CustomLayout(a.map(litDouble("hist_sketch_weighted_custom", _)).toArray))),
-    // packed-counter histogram aggregates (adaptive bit-width per-group
-    // buffers — the high-group-cardinality memory path, SQL-callable)
-    "hist_sketch_packed_log_quadratic" ->
-      expectArgs("hist_sketch_packed_log_quadratic", 5)(packedSketchAgg(
-        "hist_sketch_packed_log_quadratic",
-        a => LogQuadraticLayout(
-          litDouble("hist_sketch_packed_log_quadratic", a(0)),
-          litDouble("hist_sketch_packed_log_quadratic", a(1)),
-          litDouble("hist_sketch_packed_log_quadratic", a(2)),
-          litDouble("hist_sketch_packed_log_quadratic", a(3))))),
-    "hist_sketch_packed_custom" ->
-      expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(packedSketchAgg(
-        "hist_sketch_packed_custom",
-        a => CustomLayout(a.map(litDouble("hist_sketch_packed_custom", _)).toArray))),
+    // histogram aggregates with the default layout
+    "hist_sketch" -> expectArgs("hist_sketch", 1)(sketchAgg(_, DefaultSqlLayout)),
+    "hist_sketch_weighted" ->
+      expectArgs("hist_sketch_weighted", 2)(weightedSketchAgg(_, DefaultSqlLayout)),
     // companion-sketch aggregates: accuracy parameters are per-call SQL
     // literals; 1-arg forms use the library defaults, matching the DSL
     "hll_sketch" -> { args =>
@@ -344,22 +294,13 @@ object GraftExtensions {
     mergeAgg(SketchCodec.CmsCodec),
     mergeAgg(SketchCodec.BloomCodec),
     mergeAgg(SketchCodec.TDigestCodec),
-    mergeAgg(SketchCodec.KllCodec),
-    // native bin-index scalar with layout literals (whole-stage codegen)
-    "hist_bin_index_log_quadratic" -> expectArgs("hist_bin_index_log_quadratic", 5)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        LogQuadraticLayout(
-          litDouble("hist_bin_index_log_quadratic", args(1)),
-          litDouble("hist_bin_index_log_quadratic", args(2)),
-          litDouble("hist_bin_index_log_quadratic", args(3)),
-          litDouble("hist_bin_index_log_quadratic", args(4))))),
-    "hist_bin_index_otel" -> expectArgs("hist_bin_index_otel", 2)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        OtelExponentialLayout(litInt("hist_bin_index_otel", args(1))))),
-    "hist_bin_index_custom" -> expectArgs("hist_bin_index_custom", 2, atLeast = true)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        CustomLayout(args.tail.map(litDouble("hist_bin_index_custom", _)).toArray))))
+    mergeAgg(SketchCodec.KllCodec)) ++
+    // layout-parameterized forms: histogram aggregates over (value[, weight]),
+    // cross-layout re-binning of a sketch, and the native bin-index scalar
+    // (whole-stage codegen), each followed by the layout literals
+    withLayout("hist_sketch", 1, AllSuffixes: _*)(sketchAgg) ++
+    withLayout("hist_sketch_weighted", 2, "log_quadratic", "custom")(weightedSketchAgg) ++
+    withLayout("hist_rebin", 1, AllSuffixes: _*)((a, l) => HistRebin(a.head, l)) ++
+    withLayout("hist_bin_index", 1, "log_quadratic", "otel", "custom")((a, l) =>
+      HistBinIndex(Cast(a.head, DoubleType), l))
 }

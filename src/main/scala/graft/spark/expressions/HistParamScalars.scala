@@ -2,26 +2,19 @@ package graft.spark.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
 import graft.core._
 
 /**
- * Static evaluation helpers for the estimator-parameterized scalar queries
- * and the sketch-rewriting scalars (rebin, reference-format migration) —
- * shared by interpreted eval and generated code, same pattern as
- * [[HistEval]]. Estimator/layout policies travel as codegen reference
- * objects (they are constructor-time literals, not row data).
+ * Static evaluation helpers for the sketch-rewriting scalars (rebin,
+ * reference-format migration) — shared by interpreted eval and generated
+ * code, same pattern as [[HistEval]]. The target layout travels as a codegen
+ * reference object (it is a constructor-time literal, not row data).
  */
 object HistParamEval {
-  def valueAtRank(b: Array[Byte], r: Long, est: ValueEstimator): Double =
-    SketchEnvelope.fromBytes(b).valueAt(r, est)
-
-  def quantile(b: Array[Byte], p: Double, qe: QuantileEstimator, ve: ValueEstimator): Double =
-    SketchEnvelope.fromBytes(b).quantile(p, qe, ve)
-
   def rebin(b: Array[Byte], layout: Layout): Array[Byte] =
     SketchEnvelope.toBytes(Histogram(layout).add(SketchEnvelope.fromBytes(b)))
 
@@ -40,70 +33,6 @@ object HistParamEval {
     case other => throw new IllegalArgumentException(
       s"unknown value estimator '$other' (uniform|lower_bound|upper_bound|mid_point)")
   }
-}
-
-/** Native `hist_value_at_rank(sketch, rank, estimator)` — the estimator is a
- * constructor-time policy (parsed from a literal) carried as a codegen
- * reference object. */
-case class HistValueAtRankEst(left: Expression, right: Expression, est: ValueEstimator)
-    extends BinaryExpression with SketchInput {
-  override protected def sketchChild: Expression = left
-  override protected def fnName: String = prettyName
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val s = checkSketchType()
-    if (s != TypeCheckResult.TypeCheckSuccess) s
-    else if (right.dataType == org.apache.spark.sql.types.LongType) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a BIGINT rank argument, got ${right.dataType.sql}")
-    }
-  }
-  override def nullSafeEval(b: Any, r: Any): Any =
-    HistParamEval.valueAtRank(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Long], est)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val estRef = ctx.addReferenceObj("est", est, classOf[ValueEstimator].getName)
-    defineCodeGen(ctx, ev, (b, r) =>
-      s"graft.spark.expressions.HistParamEval.valueAtRank($b, $r, $estRef)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : HistValueAtRankEst = copy(left = l, right = r)
-  override def prettyName: String = "hist_value_at_rank"
-}
-
-/** Native `hist_quantile(sketch, p, alphap, betap[, estimator])` — explicit
- * SciPy plotting positions + value-reconstruction policy (reference
- * `getQuantile(p, QuantileEstimator, ValueEstimator)`). */
-case class HistQuantileParam(
-    left: Expression,
-    right: Expression,
-    alphap: Double,
-    betap: Double,
-    est: ValueEstimator)
-    extends BinaryExpression with SketchInput {
-  @transient private lazy val qe: QuantileEstimator = QuantileEstimator(alphap, betap)
-  override protected def sketchChild: Expression = left
-  override protected def fnName: String = prettyName
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val s = checkSketchType()
-    if (s != TypeCheckResult.TypeCheckSuccess) s
-    else if (right.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a DOUBLE p argument, got ${right.dataType.sql}")
-  }
-  override def nullSafeEval(b: Any, p: Any): Any =
-    HistParamEval.quantile(b.asInstanceOf[Array[Byte]], p.asInstanceOf[Double], qe, est)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qeRef = ctx.addReferenceObj("qe", qe, classOf[QuantileEstimator].getName)
-    val estRef = ctx.addReferenceObj("est", est, classOf[ValueEstimator].getName)
-    defineCodeGen(ctx, ev, (b, p) =>
-      s"graft.spark.expressions.HistParamEval.quantile($b, $p, $qeRef, $estRef)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : HistQuantileParam = copy(left = l, right = r)
-  override def prettyName: String = "hist_quantile"
 }
 
 /** Native `hist_rebin(sketch, layout...)`: re-bins a sketch into a new
@@ -160,20 +89,6 @@ case class HistToReference(child: Expression) extends UnaryExpression with Sketc
 /** Column-level constructors. */
 object HistParamScalars {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-
-  def valueAtRank(sketch: Column, rank: Column, estimator: String): Column =
-    column(HistValueAtRankEst(
-      expression(sketch), expression(rank.cast("long")), HistParamEval.estimator(estimator)))
-
-  def quantile(
-      sketch: Column,
-      p: Column,
-      alphap: Double,
-      betap: Double,
-      estimator: String): Column =
-    column(HistQuantileParam(
-      expression(sketch), expression(p.cast("double")),
-      alphap, betap, HistParamEval.estimator(estimator)))
 
   def rebin(sketch: Column, newLayout: Layout): Column =
     column(HistRebin(expression(sketch), newLayout))

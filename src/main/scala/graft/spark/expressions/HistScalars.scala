@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-import graft.core.SketchEnvelope
+import graft.core.{QuantileEstimator, SketchEnvelope, ValueEstimator}
 
 /**
  * Static evaluation helpers shared by interpreted eval and generated code —
@@ -17,8 +17,10 @@ import graft.core.SketchEnvelope
  * boxing/encoding boundary).
  */
 object HistEval {
-  def quantile(b: Array[Byte], p: Double): Double = SketchEnvelope.fromBytes(b).quantile(p)
-  def valueAtRank(b: Array[Byte], r: Long): Double = SketchEnvelope.fromBytes(b).valueAt(r)
+  def quantile(b: Array[Byte], p: Double, qe: QuantileEstimator, ve: ValueEstimator): Double =
+    SketchEnvelope.fromBytes(b).quantile(p, qe, ve)
+  def valueAtRank(b: Array[Byte], r: Long, ve: ValueEstimator): Double =
+    SketchEnvelope.fromBytes(b).valueAt(r, ve)
   def total(b: Array[Byte]): Long = SketchEnvelope.fromBytes(b).totalCount
   def minv(b: Array[Byte]): Double = SketchEnvelope.fromBytes(b).min
   def maxv(b: Array[Byte]): Double = SketchEnvelope.fromBytes(b).max
@@ -60,8 +62,15 @@ private[expressions] trait SketchInput { self: Expression =>
       s"$fnName requires a BINARY sketch argument, got ${sketchChild.dataType.sql}")
 }
 
-/** Native `hist_quantile(sketch, p)`. */
-case class HistQuantile(left: Expression, right: Expression)
+/** Native `hist_quantile(sketch, p)` under SciPy plotting positions and a
+ * value-reconstruction policy (reference `getQuantile(p, QuantileEstimator,
+ * ValueEstimator)`). Both policies are constructor-time literals, carried
+ * into generated code as reference objects. */
+case class HistQuantile(
+    left: Expression,
+    right: Expression,
+    quantileEstimator: QuantileEstimator = QuantileEstimator.SciPyDefault,
+    valueEstimator: ValueEstimator = ValueEstimator.Uniform)
     extends BinaryExpression with SketchInput {
   override protected def sketchChild: Expression = left
   override protected def fnName: String = prettyName
@@ -73,17 +82,26 @@ case class HistQuantile(left: Expression, right: Expression)
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a DOUBLE p argument, got ${right.dataType.sql}")
   }
-  override def nullSafeEval(b: Any, p: Any): Any =
-    HistEval.quantile(b.asInstanceOf[Array[Byte]], p.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.spark.expressions.HistEval.quantile($b, $p)")
+  override def nullSafeEval(b: Any, p: Any): Any = HistEval.quantile(
+    b.asInstanceOf[Array[Byte]], p.asInstanceOf[Double], quantileEstimator, valueEstimator)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val qe = ctx.addReferenceObj("qe", quantileEstimator, classOf[QuantileEstimator].getName)
+    val ve = ctx.addReferenceObj("ve", valueEstimator, classOf[ValueEstimator].getName)
+    defineCodeGen(ctx, ev, (b, p) =>
+      s"graft.spark.expressions.HistEval.quantile($b, $p, $qe, $ve)")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HistQuantile =
     copy(left = l, right = r)
   override def prettyName: String = "hist_quantile"
 }
 
-/** Native `hist_value_at_rank(sketch, rank)`. */
-case class HistValueAtRank(left: Expression, right: Expression)
+/** Native `hist_value_at_rank(sketch, rank)` under a value-reconstruction
+ * policy (reference `getValue(rank, ValueEstimator)`), carried into generated
+ * code as a reference object. */
+case class HistValueAtRank(
+    left: Expression,
+    right: Expression,
+    valueEstimator: ValueEstimator = ValueEstimator.Uniform)
     extends BinaryExpression with SketchInput {
   override protected def sketchChild: Expression = left
   override protected def fnName: String = prettyName
@@ -96,9 +114,12 @@ case class HistValueAtRank(left: Expression, right: Expression)
       s"$prettyName requires a BIGINT rank argument, got ${right.dataType.sql}")
   }
   override def nullSafeEval(b: Any, r: Any): Any =
-    HistEval.valueAtRank(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r) => s"graft.spark.expressions.HistEval.valueAtRank($b, $r)")
+    HistEval.valueAtRank(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Long], valueEstimator)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ve = ctx.addReferenceObj("ve", valueEstimator, classOf[ValueEstimator].getName)
+    defineCodeGen(ctx, ev, (b, r) =>
+      s"graft.spark.expressions.HistEval.valueAtRank($b, $r, $ve)")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HistValueAtRank =
     copy(left = l, right = r)
   override def prettyName: String = "hist_value_at_rank"
@@ -189,10 +210,17 @@ case class HistBins(child: Expression) extends UnaryExpression with SketchInput 
 object HistScalars {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  def quantile(sketch: Column, p: Column): Column =
-    column(HistQuantile(expression(sketch), expression(p.cast("double"))))
-  def valueAtRank(sketch: Column, rank: Column): Column =
-    column(HistValueAtRank(expression(sketch), expression(rank.cast("long"))))
+  def quantile(
+      sketch: Column,
+      p: Column,
+      qe: QuantileEstimator = QuantileEstimator.SciPyDefault,
+      ve: ValueEstimator = ValueEstimator.Uniform): Column =
+    column(HistQuantile(expression(sketch), expression(p.cast("double")), qe, ve))
+  def valueAtRank(
+      sketch: Column,
+      rank: Column,
+      ve: ValueEstimator = ValueEstimator.Uniform): Column =
+    column(HistValueAtRank(expression(sketch), expression(rank.cast("long")), ve))
   def quantiles(sketch: Column, ps: Column): Column =
     column(HistQuantiles(expression(sketch), expression(ps)))
   def stat(sketch: Column, s: HistStat.Stat): Column =

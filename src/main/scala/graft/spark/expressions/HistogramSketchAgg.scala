@@ -27,17 +27,12 @@ case class HistogramSketchAgg(
     child: Expression,
     layout: Layout,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0,
-    packed: Boolean = false)
+    inputAggBufferOffset: Int = 0)
     extends HistogramAgg {
 
   override def children: Seq[Expression] = Seq(child)
 
-  // packed = adaptive bit-width counters for the PRE-shuffle partial buffers
-  // (where the 10^5-10^6 per-group buffers live); post-shuffle deserialize
-  // rebuilds dynamic counters, which is fine — result bytes are identical
-  override def createAggregationBuffer(): Histogram =
-    if (packed) Histogram.packed(layout) else Histogram(layout)
+  override def createAggregationBuffer(): Histogram = Histogram(layout)
 
   // Unboxed hot path: after Spark binds references, a plain double column
   // arrives as a BoundReference — read it with getDouble instead of eval()

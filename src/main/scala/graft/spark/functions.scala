@@ -35,12 +35,6 @@ object functions {
   def hist_sketch(c: Column, layout: Layout): Column =
     aggregate(HistogramSketchAgg(expr(c.cast("double")), layout))
 
-  /** Same aggregation with adaptive bit-width (packed) counter buffers —
-   * up to 64x smaller resident per-group state; prefer when millions of
-   * group buffers are live in the aggregation hash map at once. */
-  def hist_sketch_packed(c: Column, layout: Layout): Column =
-    aggregate(HistogramSketchAgg(expr(c.cast("double")), layout, packed = true))
-
   @deprecated("use hist_sketch, which is the same native aggregate", "0.1.0")
   def hist_sketch_binary(c: Column, layout: Layout): Column = hist_sketch(c, layout)
 
@@ -121,7 +115,7 @@ object functions {
    * mid_point. lower/upper bracket the true order statistic; mid_point
    * halves the error bounds. Native expression (whole-stage codegen). */
   def hist_value_at_rank(sketch: Column, rank: Column, estimator: String): Column =
-    expressions.HistParamScalars.valueAtRank(sketch, rank, estimator)
+    expressions.HistScalars.valueAtRank(sketch, rank, HistParamEval.estimator(estimator))
 
   /** Quantile under explicit SciPy plotting positions and value estimator
    * (reference `getQuantile(p, QuantileEstimator, ValueEstimator)`).
@@ -132,8 +126,11 @@ object functions {
       alphap: Double,
       betap: Double,
       estimator: String = "uniform"): Column =
-    expressions.HistParamScalars.quantile(
-      sketch, org.apache.spark.sql.functions.lit(p), alphap, betap, estimator)
+    expressions.HistScalars.quantile(
+      sketch,
+      org.apache.spark.sql.functions.lit(p),
+      QuantileEstimator(alphap, betap),
+      HistParamEval.estimator(estimator))
 
   def hist_total(sketch: Column): Column =
     expressions.HistScalars.stat(sketch, expressions.HistStat.Total)

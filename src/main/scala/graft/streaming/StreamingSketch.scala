@@ -15,6 +15,15 @@ import graft.core.{Layout, SketchEnvelope}
  */
 object StreamingSketch {
 
+  /** Long metric `name` of a completed `Observation` (e.g. a `count` taken
+   * inside a `foreachBatch` write), 0 when it is absent or null — a
+   * micro-batch whose write plan runs no task may report neither. */
+  def observedCount(metrics: Map[String, Any], name: String): Long =
+    metrics.get(name) match {
+      case Some(n: java.lang.Long) => n
+      case _                       => 0L
+    }
+
   /** Event-time windowed histogram sketches: standard watermark + window
    * grouping with the histogram UDAF as the aggregate. */
   def windowedHistogram(

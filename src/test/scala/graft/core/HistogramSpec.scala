@@ -51,6 +51,57 @@ class HistogramSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](h.addValue(1.0, -3))
   }
 
+  test("counters widen 1->2->4->8->64 bits while the window grows both ways") {
+    val layout = IntegerLayout(-1000, 1000)
+    val h = Histogram(layout)
+    val model = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    def add(v: Int, n: Long, mode: Int): Unit = {
+      h.addValue(v.toDouble, n)
+      model(v) += n
+      assert(h.counterMode == mode, s"after +$n at $v")
+      (-1000 to 1000).foreach(i => assert(h.countAt(i) == model(i), s"bin $i"))
+    }
+    assert(h.counterMode == 0)
+    // widths 1, 2, 4 and 8 bits, each widening after the window grew on
+    // both sides at bit offsets that are not word-aligned
+    add(0, 1, 0); add(-3, 1, 0); add(7, 1, 0); add(-70, 1, 0); add(130, 1, 0)
+    add(7, 1, 1); add(-401, 3, 1); add(555, 2, 1)
+    add(-3, 3, 2); add(-901, 15, 2); add(999, 9, 2)
+    add(130, 16, 3); add(-1000, 255, 3); add(1000, 200, 3)
+    // one past 8 bits goes straight to plain 64-bit counters
+    add(1000, 56, 6); add(-999, 1, 6); add(998, 1L << 40, 6)
+    assert(h == Histogram.static(layout).add(h))
+    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(h)).counterMode == 6)
+    // a single huge increment widens 1 -> 64 bits at once; Long overflow
+    // of a counter (or of the total) throws
+    val big = Histogram(layout).addValue(3.0, Long.MaxValue)
+    assert(big.counterMode == 6 && big.countAt(3) == Long.MaxValue)
+    intercept[ArithmeticException](big.addValue(3.0))
+    val full = Histogram(layout).addValue(-5.0).addValue(3.0, Long.MaxValue - 1)
+    intercept[ArithmeticException](full.addValue(-5.0))
+    intercept[ArithmeticException](Histogram(layout).addValue(3.0).add(big))
+    // serde keeps a sparse buffer narrow: deserialized counts pick the
+    // narrowest width that holds them
+    val sparse = Histogram(layout).addValue(1.0).addValue(2.0, 3)
+    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(sparse)).counterMode == 1)
+    assert(Histogram.static(layout).counterMode == 6)
+  }
+
+  test("a sparse buffer keeps narrow counters and a small footprint") {
+    // the high-group-cardinality shape: 20 log-uniform values spread over
+    // ~2200 bins of a 1e3..1e12 layout
+    val layout = LogQuadraticLayout(10, 0.01, 0, 1e12)
+    val rnd = new java.util.SplittableRandom(7L)
+    val h = Histogram(layout)
+    (0 until 20).foreach(_ => h.addValue(1000.0 * math.exp(rnd.nextDouble() * math.log(1e9))))
+    assert(h.counterMode <= 1)
+    // a few hundred bytes, where 64-bit counters over the same window take
+    // kilobytes
+    assert(h.estimatedFootprintBytes < 1024, h.estimatedFootprintBytes)
+    val back = HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(h))
+    assert(back == h && back.estimatedFootprintBytes <= h.estimatedFootprintBytes)
+  }
+
   test("merge of equal layouts == bulk insert (random, both orders)") {
     val rnd = new java.util.SplittableRandom(0L)
     for (_ <- 0 until 200) {
@@ -214,76 +265,5 @@ class SciPyQuantileSpec extends AnyFunSuite {
     assert(est(0.5) == 4.0)
     assert(est(0.75) == 5.0)
     assert(est(1.0) == 5.0)
-  }
-
-  test("packed counters: identical observable behavior, mode upgrades, less memory") {
-    val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
-    val plain = Histogram(layout)
-    val packed = Histogram.packed(layout)
-    assert(packed.counterMode == 0)
-    val rnd = new java.util.SplittableRandom(99L)
-    // log-uniform values: many bins at low counts — the packed sweet spot
-    (0 until 5000).foreach { _ =>
-      val v = math.exp(rnd.nextDouble() * math.log(1e6))
-      plain.addValue(v)
-      packed.addValue(v)
-    }
-    assert(packed == plain && plain == packed)
-    assert(packed.counterMode < 6, s"mode ${packed.counterMode} did not stay packed")
-    assert(
-      packed.estimatedFootprintBytes < plain.estimatedFootprintBytes / 2,
-      s"packed ${packed.estimatedFootprintBytes} vs plain ${plain.estimatedFootprintBytes}")
-    // serde round-trip + nonEmptyBins parity
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
-    val bytes = HistogramSerde.toBytes(packed)
-    assert(HistogramSerde.toBytes(plain).sameElements(bytes))
-    assert(HistogramSerde.fromBytes(layout, bytes) == packed)
-    // weighted adds force mode upgrades through every class up to 6
-    val p2 = Histogram.packed(layout)
-    Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2).foreach { w =>
-      p2.addValue(5.0, w)
-    }
-    val pl2 = Histogram(layout)
-    Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2).foreach { w =>
-      pl2.addValue(5.0, w)
-    }
-    assert(p2.counterMode == 6)
-    assert(p2 == pl2)
-    // merging packed into plain and vice versa stays exact
-    val m1 = Histogram(layout).add(packed).add(p2)
-    val m2 = Histogram.packed(layout).add(plain).add(pl2)
-    assert(m1 == m2)
-  }
-
-  test("static (preallocated) histogram behaves identically to the windowed one") {
-    val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
-    val st = Histogram.static(layout)
-    val dyn = Histogram(layout)
-    val rnd = new java.util.SplittableRandom(13L)
-    (0 until 3000).foreach { _ =>
-      val v = rnd.nextDouble(-10.0, 2e6) // includes under/overflow traffic
-      st.addValue(v)
-      dyn.addValue(v)
-    }
-    assert(st == dyn)
-    assert(st.nonEmptyBins == dyn.nonEmptyBins)
-    assert(HistogramSerde.toBytes(st).sameElements(HistogramSerde.toBytes(dyn)))
-    // preallocation trades memory for growth-free recording
-    assert(st.estimatedFootprintBytes > dyn.estimatedFootprintBytes)
-  }
-
-  test("packed counters: window growth in both directions preserves counts") {
-    val layout = LogQuadraticLayout(1e-6, 1e-2, -1e6, 1e6)
-    val packed = Histogram.packed(layout)
-    val plain = Histogram(layout)
-    val rnd = new java.util.SplittableRandom(7L)
-    // alternate far-apart values so the window repeatedly grows on both ends
-    (0 until 2000).foreach { i =>
-      val v = if (i % 2 == 0) rnd.nextDouble(1e-5, 1.0) else -rnd.nextDouble(1e-5, 1.0) * 1e5
-      packed.addValue(v)
-      plain.addValue(v)
-    }
-    assert(packed == plain)
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
   }
 }

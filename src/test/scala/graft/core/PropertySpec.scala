@@ -29,21 +29,39 @@ object HistogramProperties extends Properties("Histogram") {
   private val genWeights: Gen[List[Long]] =
     Gen.listOf(Gen.chooseNum(1L, 1000000L))
 
-  property("packed/static/windowed buffers are observably identical") =
-    forAll(genLayout, genValues, genValues, genWeights) { (l, a, b, ws) =>
-      def fill(h: Histogram): Histogram = {
-        a.foreach(h.addValue(_))
-        b.zip(ws).foreach { case (v, w) => h.addValue(v, w) }
+  private val genWeighted: Gen[List[(Double, Long)]] = Gen.listOf(Gen.zip(
+    Gen.chooseNum(-1e5, 1e5).suchThat(v => !v.isNaN),
+    Gen.frequency(4 -> Gen.const(1L), 1 -> Gen.chooseNum(1L, 300L), 1 -> Gen.chooseNum(1L, 1L << 40))))
+
+  property("buffer and static match an exact per-bin count model") =
+    forAll(genLayout, genWeighted, Gen.long) { (l, vs, seed) =>
+      // exact model: per-bin totals from the layout's own mapping
+      def bin(v: Double) = math.min(math.max(l.mapToBinIndex(v), l.underflowBinIndex), l.overflowBinIndex)
+      val model = vs.groupMapReduce(vw => bin(vw._1))(_._2)(_ + _)
+      def fill(h: Histogram, part: Seq[(Double, Long)]): Histogram = {
+        part.foreach { case (v, w) => h.addValue(v, w) }
         h
       }
-      val windowed = fill(Histogram(l))
-      val packed = fill(Histogram.packed(l))
-      val static0 = fill(Histogram.static(l))
-      windowed == packed && windowed == static0 &&
-      java.util.Arrays.equals(HistogramSerde.toBytes(windowed), HistogramSerde.toBytes(packed)) &&
-      // cross-variant merges stay exact
-      Histogram.packed(l).add(windowed).add(static0) ==
-        Histogram(l).add(packed).add(packed)
+      // random partitions merged along a random tree, some operands
+      // through a V1 serde round-trip first
+      val rnd = new java.util.SplittableRandom(seed)
+      var parts = vs.grouped(1 + rnd.nextInt(5)).map(fill(Histogram(l), _)).toVector :+ Histogram(l)
+      while (parts.length > 1) {
+        val i = rnd.nextInt(parts.length - 1)
+        val right =
+          if (rnd.nextBoolean()) HistogramSerde.fromBytes(l, HistogramSerde.toBytes(parts(i + 1)))
+          else parts(i + 1)
+        parts = parts.patch(i, Seq(parts(i).add(right)), 2)
+      }
+      val merged = parts.head
+      val static0 = fill(Histogram.static(l), vs)
+      def bins(h: Histogram) = h.nonEmptyBins.map(b => b.binIndex -> b.binCount).toMap
+      bins(merged) == model && bins(static0) == model &&
+      merged.totalCount == vs.map(_._2).sum &&
+      (vs.isEmpty || (merged.min == vs.map(_._1).min && merged.max == vs.map(_._1).max)) &&
+      merged == static0 && static0 == merged &&
+      java.util.Arrays.equals(HistogramSerde.toBytes(merged), HistogramSerde.toBytes(static0)) &&
+      HistogramSerde.fromBytes(l, HistogramSerde.toBytes(merged)) == merged
     }
 
   property("reference type-info layout serde round-trips random layouts") =

@@ -119,7 +119,6 @@ object AggGolden {
   private def cases: Seq[Case] = Seq(
     dsl("dsl.hist_sketch", deterministic, hist_sketch(col("v"), layout)),
     dsl("dsl.hist_sketch.int", deterministic, hist_sketch(col("i"), layout)),
-    dsl("dsl.hist_sketch_packed", deterministic, hist_sketch_packed(col("v"), layout)),
     dsl("dsl.hist_sketch_binary", deterministic, hist_sketch_binary(col("v"), layout)),
     dsl("dsl.hist_sketch_weighted", deterministic,
       hist_sketch_weighted(col("v"), col("w"), layout)),

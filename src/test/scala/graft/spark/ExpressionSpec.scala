@@ -171,6 +171,20 @@ class ExpressionSpec extends AnyFunSuite {
     assert(r.getDouble(1) == kernel.valueAt(10L))
     assert(r.getLong(2) == vs.length.toLong)
     assert(r.getDouble(3) == kernel.max)
+    // the default estimator forms keep their generated column names
+    val sqlNames = spark
+      .sql("""SELECT hist_quantile(sk, 0.5), hist_value_at_rank(sk, 10)
+              FROM (SELECT hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6) AS sk
+                    FROM sql_vals)""")
+      .columns.toSeq
+    val dslNames = spark.table("sql_vals")
+      .agg(hist_sketch(col("v"), layout).as("sk"))
+      .select(hist_quantile(col("sk"), 0.5), hist_value_at_rank(col("sk"), lit(10L)))
+      .columns.toSeq
+    assert(sqlNames ++ dslNames == Seq(
+      "hist_quantile(sk, 0.5)", "hist_value_at_rank(sk, 10)",
+      "hist_quantile(sk, CAST(0.5 AS DOUBLE))", "hist_value_at_rank(sk, CAST(10 AS BIGINT))"),
+      sqlNames ++ dslNames)
     // OTel + custom variants parse and aggregate
     val r2 = spark
       .sql("""SELECT hist_total(hist_sketch_otel(v, 4)) AS n1,
@@ -581,20 +595,36 @@ class ExpressionSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
     assert(math.abs(rankOf(kq) - 0.5) < 0.05, s"kll p50 rank ${rankOf(kq)}")
 
-    // packed-counter histogram SQL form: byte-identical to the plain native
-    // aggregate (packing changes the buffer representation, not the result)
-    assert(java.util.Arrays.equals(
-      bytes("SELECT hist_sketch_packed_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6) FROM sql_comp"),
-      bytes("SELECT hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6) FROM sql_comp")))
-    assert(java.util.Arrays.equals(
-      bytes("SELECT hist_sketch_packed_custom(v, 10.0, 500.0, 900.0) FROM sql_comp"),
-      bytes("SELECT hist_sketch_custom(v, 10.0, 500.0, 900.0) FROM sql_comp")))
-
     // wrong arity fails analysis with the builder's message, not an
     // IndexOutOfBounds
     val e = intercept[Exception] {
       spark.sql("SELECT hll_sketch(s, 12, 99) FROM sql_comp").collect()
     }
     assert(e.getMessage.contains("hll_sketch"), e.getMessage)
+    // every layout-suffixed name: one argument short of its arity fails with
+    // the builder's count message, a column as a layout parameter with the
+    // builder's literal message
+    def analysisError(q: String): String =
+      intercept[Exception](spark.sql(s"SELECT $q FROM sql_comp").collect()).getMessage
+    val errorLimited = Seq("log_quadratic", "log_linear", "log_optimal")
+    val layoutNames =
+      Seq("hist_sketch", "hist_rebin").flatMap(f =>
+        (errorLimited :+ "otel" :+ "custom").map(x => (s"${f}_$x", "v"))) ++
+      Seq("log_quadratic", "custom").map(x => (s"hist_sketch_weighted_$x", "v, w")) ++
+      Seq("log_quadratic", "otel", "custom").map(x => (s"hist_bin_index_$x", "v"))
+    assert(layoutNames.size == 15)
+    layoutNames.foreach { case (fn, lead) =>
+      val nLead = lead.split(",").length
+      val (params, arity) =
+        if (errorLimited.exists(fn.endsWith)) (Seq("1e-3", "1e-2", "0.0"), s"${nLead + 4}")
+        else if (fn.endsWith("_otel")) (Nil, s"${nLead + 1}")
+        else (Nil, s"at least ${nLead + 1}")
+      val short = analysisError(s"$fn(${(lead +: params).mkString(", ")})")
+      val got = nLead + params.size
+      assert(short.contains(s"$fn expects $arity argument(s), got $got"), short)
+      val nonLiteral = analysisError(s"$fn(${(lead +: "id" +: params).mkString(", ")})")
+      val what = if (fn.endsWith("_otel")) "parameters" else "layout parameters"
+      assert(nonLiteral.contains(s"$fn: $what must be literals"), nonLiteral)
+    }
   }
 }

@@ -86,7 +86,7 @@ class PlanAndParitySpec extends AnyFunSuite {
       col("id").cast("string").as("s"), col("id").cast("string").cast("binary").as("b"))
     df.createOrReplaceTempView("plan_guard")
     val dsl = Seq(
-      hist_sketch(col("v"), layout), hist_sketch_packed(col("v"), layout),
+      hist_sketch(col("v"), layout),
       hist_sketch_weighted(col("v"), col("w"), layout),
       hll_sketch(col("s")), hll_sketch_long(col("w")), cms_sketch(col("s")),
       cms_sketch_weighted(col("s"), col("w")), bloom_sketch(col("w"), 1000),
@@ -97,7 +97,7 @@ class PlanAndParitySpec extends AnyFunSuite {
     val sql = Seq(
       "hist_sketch(v)", "hist_sketch_weighted(v, w)",
       "hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6)",
-      "hist_sketch_packed_custom(v, 10.0, 50.0)", "hist_sketch_weighted_custom(v, w, 10.0)",
+      "hist_sketch_custom(v, 10.0, 50.0)", "hist_sketch_weighted_custom(v, w, 10.0)",
       "hll_sketch(s)", "cms_sketch(s)", "cms_sketch_weighted(s, w)", "bloom_sketch(w, 1000)",
       "tdigest_sketch(v)", "kll_sketch(v)", "hist_merge(b)", "hll_merge(b)", "cms_merge(b)",
       "bloom_merge(b)", "tdigest_merge(b)", "kll_merge(b)")

@@ -11,6 +11,12 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.spark.SparkTestSession.spark
   private val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
 
+  test("observed batch counts read 0 when the metric is absent or null") {
+    assert(StreamingSketch.observedCount(Map.empty, "n") == 0L)
+    assert(StreamingSketch.observedCount(Map("n" -> null), "n") == 0L)
+    assert(StreamingSketch.observedCount(Map("n" -> 7L, "m" -> 3L), "n") == 7L)
+  }
+
   test("windowed streaming histogram equals the batch aggregation") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
