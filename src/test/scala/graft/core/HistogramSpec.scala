@@ -266,4 +266,75 @@ class SciPyQuantileSpec extends AnyFunSuite {
     assert(est(0.75) == 5.0)
     assert(est(1.0) == 5.0)
   }
+
+  // Histogram(layout) starts at packed (narrow) counters inside a growing
+  // window; Histogram.static holds plain 64-bit counters over the full range
+
+  test("packed counters: identical observable behavior, mode upgrades, less memory") {
+    val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
+    val plain = Histogram.static(layout)
+    val packed = Histogram(layout)
+    assert(packed.counterMode == 0)
+    val rnd = new java.util.SplittableRandom(99L)
+    // log-uniform values: many bins at low counts — the packed sweet spot
+    (0 until 5000).foreach { _ =>
+      val v = math.exp(rnd.nextDouble() * math.log(1e6))
+      plain.addValue(v)
+      packed.addValue(v)
+    }
+    assert(packed == plain && plain == packed)
+    assert(packed.counterMode < 6, s"mode ${packed.counterMode} did not stay packed")
+    assert(
+      packed.estimatedFootprintBytes < plain.estimatedFootprintBytes / 2,
+      s"packed ${packed.estimatedFootprintBytes} vs plain ${plain.estimatedFootprintBytes}")
+    // serde round-trip + nonEmptyBins parity
+    assert(packed.nonEmptyBins == plain.nonEmptyBins)
+    val bytes = HistogramSerde.toBytes(packed)
+    assert(HistogramSerde.toBytes(plain).sameElements(bytes))
+    assert(HistogramSerde.fromBytes(layout, bytes) == packed)
+    // weighted adds force mode upgrades through every class up to 6
+    val weights = Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2)
+    val p2 = Histogram(layout)
+    weights.foreach(w => p2.addValue(5.0, w))
+    val pl2 = Histogram.static(layout)
+    weights.foreach(w => pl2.addValue(5.0, w))
+    assert(p2.counterMode == 6)
+    assert(p2 == pl2)
+    // merging packed into plain and vice versa stays exact
+    val m1 = Histogram.static(layout).add(packed).add(p2)
+    val m2 = Histogram(layout).add(plain).add(pl2)
+    assert(m1 == m2)
+  }
+
+  test("static (preallocated) histogram behaves identically to the windowed one") {
+    val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
+    val st = Histogram.static(layout)
+    val dyn = Histogram(layout)
+    val rnd = new java.util.SplittableRandom(13L)
+    (0 until 3000).foreach { _ =>
+      val v = rnd.nextDouble(-10.0, 2e6) // includes under/overflow traffic
+      st.addValue(v)
+      dyn.addValue(v)
+    }
+    assert(st == dyn)
+    assert(st.nonEmptyBins == dyn.nonEmptyBins)
+    assert(HistogramSerde.toBytes(st).sameElements(HistogramSerde.toBytes(dyn)))
+    // preallocation trades memory for growth-free recording
+    assert(st.estimatedFootprintBytes > dyn.estimatedFootprintBytes)
+  }
+
+  test("packed counters: window growth in both directions preserves counts") {
+    val layout = LogQuadraticLayout(1e-6, 1e-2, -1e6, 1e6)
+    val packed = Histogram(layout)
+    val plain = Histogram.static(layout)
+    val rnd = new java.util.SplittableRandom(7L)
+    // alternate far-apart values so the window repeatedly grows on both ends
+    (0 until 2000).foreach { i =>
+      val v = if (i % 2 == 0) rnd.nextDouble(1e-5, 1.0) else -rnd.nextDouble(1e-5, 1.0) * 1e5
+      packed.addValue(v)
+      plain.addValue(v)
+    }
+    assert(packed == plain)
+    assert(packed.nonEmptyBins == plain.nonEmptyBins)
+  }
 }

@@ -26,14 +26,13 @@ object HistogramProperties extends Properties("Histogram") {
     h
   }
 
-  private val genWeights: Gen[List[Long]] =
-    Gen.listOf(Gen.chooseNum(1L, 1000000L))
-
   private val genWeighted: Gen[List[(Double, Long)]] = Gen.listOf(Gen.zip(
     Gen.chooseNum(-1e5, 1e5).suchThat(v => !v.isNaN),
     Gen.frequency(4 -> Gen.const(1L), 1 -> Gen.chooseNum(1L, 300L), 1 -> Gen.chooseNum(1L, 1L << 40))))
 
-  property("buffer and static match an exact per-bin count model") =
+  // the self-sizing buffer (packed counters over a growing window) and the
+  // preallocated static buffer both match an exact per-bin count model
+  property("packed/static/windowed buffers are observably identical") =
     forAll(genLayout, genWeighted, Gen.long) { (l, vs, seed) =>
       // exact model: per-bin totals from the layout's own mapping
       def bin(v: Double) = math.min(math.max(l.mapToBinIndex(v), l.underflowBinIndex), l.overflowBinIndex)
