@@ -24,10 +24,11 @@ final class Histogram private (val layout: Layout) extends Serializable {
   // Counters start at 1 bit (mode 0) and widen on demand to 2, 4 and 8 bits
   // (reference semantics dynahist `DynamicHistogram.java:30-75, 152-221`), so
   // sparse per-group buffers stay up to 64x smaller than plain counters. A
-  // counter past 255 moves the window straight to plain 64-bit counters
-  // (mode 6, the reference's StaticHistogram-style buffer): such a buffer has
-  // seen at least 256 values, so it is one of the few heavy buffers where
-  // recording speed matters.
+  // widening goes straight to plain 64-bit counters (mode 6, the reference's
+  // StaticHistogram-style buffer, the fastest to record into) when a counter
+  // passes 255 or when the buffer is dense: more than 255 values recorded
+  // and at least one per window bin, so 64-bit counters cost at most 8 bytes
+  // per recorded value (see `widthFor`).
   private var counts: Array[Long] = Histogram.EmptyCounts
   private var windowStart: Int = 0 // bin index of counter 0; meaningful iff windowLen > 0
   private var windowLen: Int = 0
@@ -128,9 +129,20 @@ final class Histogram private (val layout: Layout) extends Serializable {
     if ((updated & ~mask) == 0L) counts(w) = word + (delta << s)
     else {
       if (updated < 0) throw new ArithmeticException("counter overflow")
-      upgradeMode(Histogram.modeFor(updated))
+      upgradeMode(widthFor(updated))
       setCounterAt(pos, updated)
     }
+  }
+
+  /** Counter width class for a window that must hold counter `v` (or a
+   * bit-OR mask of counters): plain 64 bits once the window is dense — more
+   * than 255 regular values and at least one per window bin — else the
+   * narrowest width that holds `v`. Dense windows belong to the heavy
+   * buffers, where narrow counters would still take a large share of the
+   * values to come. */
+  private def widthFor(v: Long): Int = {
+    val regular = totalCountVar - underflowCountVar - overflowCountVar
+    if (regular > 255L && regular >= windowLen) 6 else Histogram.modeFor(v)
   }
 
   private def upgradeMode(newMode: Int): Unit = {
@@ -540,10 +552,15 @@ final class Histogram private (val layout: Layout) extends Serializable {
       total: Long,
       newMin: Double,
       newMax: Double): Unit = {
+    underflowCountVar = underflow
+    overflowCountVar = overflow
+    totalCountVar = total
+    minVar = newMin
+    maxVar = newMax
     var mask = 0L
     newCounts.foreach(c => mask |= c)
-    mode = Histogram.modeFor(mask)
     windowLen = newCounts.length
+    mode = widthFor(mask)
     if (mode == 6) counts = newCounts
     else {
       counts = new Array[Long](wordsFor(windowLen, mode))
@@ -555,11 +572,6 @@ final class Histogram private (val layout: Layout) extends Serializable {
       }
     }
     windowStart = newWindowStart
-    underflowCountVar = underflow
-    overflowCountVar = overflow
-    totalCountVar = total
-    minVar = newMin
-    maxVar = newMax
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import scala.collection.immutable.ListMap
 
 import graft.core._
 import graft.spark.expressions._
@@ -135,8 +136,8 @@ object GraftExtensions {
 
   /** Layout literals by SQL name suffix: (absolute error, relative error,
    * min, max) for the error-limiting layouts, the OTel scale, or the custom
-   * bin boundaries. */
-  private val layoutSuffixes: Map[String, LayoutSuffix] = Map(
+   * bin boundaries; in registration order. */
+  private val layoutSuffixes: ListMap[String, LayoutSuffix] = ListMap(
     "log_quadratic" -> errorLimited(LogQuadraticLayout(_, _, _, _)),
     "log_linear" -> errorLimited(LogLinearLayout(_, _, _, _)),
     "log_optimal" -> errorLimited(LogOptimalLayout(_, _, _, _)),
@@ -144,8 +145,6 @@ object GraftExtensions {
       1, variadic = false, (fn, a) => OtelExponentialLayout(litInt(fn, a.head))),
     "custom" -> LayoutSuffix(
       1, variadic = true, (fn, a) => CustomLayout(a.map(litDouble(fn, _)).toArray)))
-
-  private val AllSuffixes = Seq("log_quadratic", "log_linear", "log_optimal", "otel", "custom")
 
   /** Builders `family_suffix` for each listed suffix: the first `lead`
    * arguments go to `build` as they are, the rest are the layout literals. */
@@ -298,9 +297,9 @@ object GraftExtensions {
     // layout-parameterized forms: histogram aggregates over (value[, weight]),
     // cross-layout re-binning of a sketch, and the native bin-index scalar
     // (whole-stage codegen), each followed by the layout literals
-    withLayout("hist_sketch", 1, AllSuffixes: _*)(sketchAgg) ++
+    withLayout("hist_sketch", 1, layoutSuffixes.keys.toSeq: _*)(sketchAgg) ++
     withLayout("hist_sketch_weighted", 2, "log_quadratic", "custom")(weightedSketchAgg) ++
-    withLayout("hist_rebin", 1, AllSuffixes: _*)((a, l) => HistRebin(a.head, l)) ++
+    withLayout("hist_rebin", 1, layoutSuffixes.keys.toSeq: _*)((a, l) => HistRebin(a.head, l)) ++
     withLayout("hist_bin_index", 1, "log_quadratic", "otel", "custom")((a, l) =>
       HistBinIndex(Cast(a.head, DoubleType), l))
 }

@@ -102,6 +102,25 @@ class HistogramSpec extends AnyFunSuite {
     assert(back == h && back.estimatedFootprintBytes <= h.estimatedFootprintBytes)
   }
 
+  test("a dense window widens straight to 64-bit counters") {
+    val layout = IntegerLayout(0, 99)
+    val h = Histogram(layout)
+    // 3 values in each of the 100 bins: 2-bit counters, 300 values
+    (0 until 3).foreach(_ => (0 until 100).foreach(v => h.addValue(v.toDouble)))
+    assert(h.counterMode == 1)
+    // the next widening sees more than 255 values and at least one per
+    // window bin, and skips the 4- and 8-bit widths
+    h.addValue(0.0)
+    assert(h.counterMode == 6 && h.countAt(0) == 4 && h.countAt(99) == 3)
+    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(h)).counterMode == 6)
+    // under/overflow values do not make a window dense
+    val edges = Histogram(layout).addValue(-5.0, 1000).addValue(500.0, 1000)
+    (0 until 3).foreach(_ => (0 until 50).foreach(v => edges.addValue(v.toDouble)))
+    edges.addValue(0.0)
+    assert(edges.counterMode == 2)
+    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(edges)).counterMode == 2)
+  }
+
   test("merge of equal layouts == bulk insert (random, both orders)") {
     val rnd = new java.util.SplittableRandom(0L)
     for (_ <- 0 until 200) {
@@ -272,37 +291,50 @@ class SciPyQuantileSpec extends AnyFunSuite {
 
   test("packed counters: identical observable behavior, mode upgrades, less memory") {
     val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
-    val plain = Histogram.static(layout)
-    val packed = Histogram(layout)
-    assert(packed.counterMode == 0)
+    val static = Histogram.static(layout)
+    val dynamic = Histogram(layout)
+    assert(dynamic.counterMode == 0)
     val rnd = new java.util.SplittableRandom(99L)
-    // log-uniform values: many bins at low counts — the packed sweet spot
-    (0 until 5000).foreach { _ =>
+    // log-uniform values over ~1400 bins: at 500 values most bins are empty
+    // or hold one or two values — the packed sweet spot
+    def record(n: Int): Unit = (0 until n).foreach { _ =>
       val v = math.exp(rnd.nextDouble() * math.log(1e6))
-      plain.addValue(v)
-      packed.addValue(v)
+      static.addValue(v)
+      dynamic.addValue(v)
     }
-    assert(packed == plain && plain == packed)
-    assert(packed.counterMode < 6, s"mode ${packed.counterMode} did not stay packed")
+    record(500)
+    assert(dynamic == static && static == dynamic)
+    assert(dynamic.counterMode < 6, s"mode ${dynamic.counterMode} did not stay packed")
+    val plainWindowBytes = 8L * dynamic.regularWindow.length
     assert(
-      packed.estimatedFootprintBytes < plain.estimatedFootprintBytes / 2,
-      s"packed ${packed.estimatedFootprintBytes} vs plain ${plain.estimatedFootprintBytes}")
+      dynamic.estimatedFootprintBytes < plainWindowBytes / 2,
+      s"dynamic ${dynamic.estimatedFootprintBytes} vs 64-bit window $plainWindowBytes")
+    // with more values than window bins the window is dense: its next
+    // widening goes straight to 64-bit counters, though no counter is
+    // past 255
+    record(4500)
+    assert(dynamic == static)
+    assert(dynamic.counterMode < 6)
+    record(20000)
+    assert(dynamic == static)
+    assert(dynamic.counterMode == 6)
+    assert(dynamic.nonEmptyBins.map(_.binCount).max <= 255)
     // serde round-trip + nonEmptyBins parity
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
-    val bytes = HistogramSerde.toBytes(packed)
-    assert(HistogramSerde.toBytes(plain).sameElements(bytes))
-    assert(HistogramSerde.fromBytes(layout, bytes) == packed)
+    assert(dynamic.nonEmptyBins == static.nonEmptyBins)
+    val bytes = HistogramSerde.toBytes(dynamic)
+    assert(HistogramSerde.toBytes(static).sameElements(bytes))
+    assert(HistogramSerde.fromBytes(layout, bytes) == dynamic)
     // weighted adds force mode upgrades through every class up to 6
     val weights = Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2)
-    val p2 = Histogram(layout)
-    weights.foreach(w => p2.addValue(5.0, w))
-    val pl2 = Histogram.static(layout)
-    weights.foreach(w => pl2.addValue(5.0, w))
-    assert(p2.counterMode == 6)
-    assert(p2 == pl2)
-    // merging packed into plain and vice versa stays exact
-    val m1 = Histogram.static(layout).add(packed).add(p2)
-    val m2 = Histogram(layout).add(plain).add(pl2)
+    val d2 = Histogram(layout)
+    weights.foreach(w => d2.addValue(5.0, w))
+    val s2 = Histogram.static(layout)
+    weights.foreach(w => s2.addValue(5.0, w))
+    assert(d2.counterMode == 6)
+    assert(d2 == s2)
+    // merging dynamic into static and vice versa stays exact
+    val m1 = Histogram.static(layout).add(dynamic).add(d2)
+    val m2 = Histogram(layout).add(static).add(s2)
     assert(m1 == m2)
   }
 
@@ -325,16 +357,16 @@ class SciPyQuantileSpec extends AnyFunSuite {
 
   test("packed counters: window growth in both directions preserves counts") {
     val layout = LogQuadraticLayout(1e-6, 1e-2, -1e6, 1e6)
-    val packed = Histogram(layout)
-    val plain = Histogram.static(layout)
+    val dynamic = Histogram(layout)
+    val static = Histogram.static(layout)
     val rnd = new java.util.SplittableRandom(7L)
     // alternate far-apart values so the window repeatedly grows on both ends
     (0 until 2000).foreach { i =>
       val v = if (i % 2 == 0) rnd.nextDouble(1e-5, 1.0) else -rnd.nextDouble(1e-5, 1.0) * 1e5
-      packed.addValue(v)
-      plain.addValue(v)
+      dynamic.addValue(v)
+      static.addValue(v)
     }
-    assert(packed == plain)
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
+    assert(dynamic == static)
+    assert(dynamic.nonEmptyBins == static.nonEmptyBins)
   }
 }
