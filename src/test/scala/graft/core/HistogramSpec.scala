@@ -85,6 +85,20 @@ class HistogramSpec extends AnyFunSuite {
     val sparse = Histogram(layout).addValue(1.0).addValue(2.0, 3)
     assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(sparse)).counterMode == 1)
     assert(Histogram.static(layout).counterMode == 6)
+    // a dense window (more than 255 regular values, at least one per
+    // window bin) widens 2 -> 64 bits at its next widening, live and on
+    // deserialization; under/overflow values do not count
+    val small = IntegerLayout(0, 99)
+    val dense = Histogram(small)
+    (0 until 3).foreach(_ => (0 until 100).foreach(v => dense.addValue(v.toDouble)))
+    assert(dense.counterMode == 1)
+    dense.addValue(0.0)
+    assert(dense.counterMode == 6 && dense.countAt(0) == 4 && dense.countAt(99) == 3)
+    assert(HistogramSerde.fromBytes(small, HistogramSerde.toBytes(dense)).counterMode == 6)
+    val edges = Histogram(small).addValue(-5.0, 1000).addValue(500.0, 1000)
+    edges.addValue(0.0, 3).addValue(0.0)
+    assert(edges.counterMode == 2)
+    assert(HistogramSerde.fromBytes(small, HistogramSerde.toBytes(edges)).counterMode == 2)
   }
 
   test("a sparse buffer keeps narrow counters and a small footprint") {
@@ -100,25 +114,6 @@ class HistogramSpec extends AnyFunSuite {
     assert(h.estimatedFootprintBytes < 1024, h.estimatedFootprintBytes)
     val back = HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(h))
     assert(back == h && back.estimatedFootprintBytes <= h.estimatedFootprintBytes)
-  }
-
-  test("a dense window widens straight to 64-bit counters") {
-    val layout = IntegerLayout(0, 99)
-    val h = Histogram(layout)
-    // 3 values in each of the 100 bins: 2-bit counters, 300 values
-    (0 until 3).foreach(_ => (0 until 100).foreach(v => h.addValue(v.toDouble)))
-    assert(h.counterMode == 1)
-    // the next widening sees more than 255 values and at least one per
-    // window bin, and skips the 4- and 8-bit widths
-    h.addValue(0.0)
-    assert(h.counterMode == 6 && h.countAt(0) == 4 && h.countAt(99) == 3)
-    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(h)).counterMode == 6)
-    // under/overflow values do not make a window dense
-    val edges = Histogram(layout).addValue(-5.0, 1000).addValue(500.0, 1000)
-    (0 until 3).foreach(_ => (0 until 50).foreach(v => edges.addValue(v.toDouble)))
-    edges.addValue(0.0)
-    assert(edges.counterMode == 2)
-    assert(HistogramSerde.fromBytes(layout, HistogramSerde.toBytes(edges)).counterMode == 2)
   }
 
   test("merge of equal layouts == bulk insert (random, both orders)") {
