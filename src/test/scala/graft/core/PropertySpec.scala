@@ -192,6 +192,37 @@ object SketchProperties extends Properties("Sketches") {
       (a ++ b).forall(merged.mightContainString)
     }
 
+  // random streams (with duplicates), k and merge trees whose operands go
+  // through the bytes at random: the items' weight sum (rank at +inf) equals
+  // the total, the bytes re-serialize unchanged, and for k >= 200 the
+  // normalized rank error stays within the 0.03 SketchSpec allows a merge
+  property("KLL merge trees keep the weight invariant, canonical bytes and the rank bound") =
+    forAll(Gen.oneOf(Gen.choose(8, 64), Gen.choose(200, 400)), Gen.choose(0, 20000), Gen.long) {
+      (k, n, seed) =>
+        import graft.sketches.Kll
+        val rnd = new java.util.SplittableRandom(seed)
+        val values = Array.fill(n)(
+          if (rnd.nextBoolean()) rnd.nextInt(50).toDouble else rnd.nextDouble() * 1e3 - 500)
+        val cuts = (0 +: Array.fill(rnd.nextInt(6))(rnd.nextInt(n + 1)).sorted.toSeq) :+ n
+        var parts = cuts.sliding(2).map { case Seq(from, until) =>
+          val s = Kll(k)
+          (from until until).foreach(i => s.add(values(i)))
+          s
+        }.toVector
+        while (parts.length > 1) {
+          val i = rnd.nextInt(parts.length - 1)
+          val right = if (rnd.nextBoolean()) Kll.fromBytes(parts(i + 1).toBytes) else parts(i + 1)
+          parts = parts.patch(i, Seq(parts(i).merge(right)), 2)
+        }
+        val merged = parts.head
+        val bytes = merged.toBytes
+        val rankOk = k < 200 || n == 0 || Seq.fill(10)(values(rnd.nextInt(n))).forall { x =>
+          math.abs(merged.rank(x) - values.count(_ <= x)).toDouble / n <= 0.03
+        }
+        merged.total == n && merged.rank(Double.PositiveInfinity) == n &&
+        java.util.Arrays.equals(Kll.fromBytes(bytes).toBytes, bytes) && rankOk
+    }
+
   property("KLL/t-digest merges conserve total weight") =
     forAll(Gen.listOf(Gen.chooseNum(-1e4, 1e4)), Gen.listOf(Gen.chooseNum(-1e4, 1e4))) {
       (a, b) =>

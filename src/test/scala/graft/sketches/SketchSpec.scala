@@ -189,6 +189,59 @@ class SketchSpec extends AnyFunSuite {
     assert(td.quantile(0.5).isNaN)
   }
 
+  test("KLL fromBytes rejects truncated, bit-flipped, inflated and NaN-carrying " +
+    "payloads with IllegalArgumentException only") {
+    val rnd = new java.util.SplittableRandom(6L)
+    val kll = Kll(8)
+    (0 until 3000).foreach(_ => kll.add(rnd.nextDouble()))
+    val good = kll.toBytes
+    val nLevels = java.nio.ByteBuffer.wrap(good).getInt(20)
+    val itemsAt = 24 + 4 * nLevels
+    def patched(f: java.nio.ByteBuffer => Unit): Array[Byte] = {
+      val b = good.clone()
+      f(java.nio.ByteBuffer.wrap(b))
+      b
+    }
+    def rejected(b: Array[Byte]): Unit = {
+      val e = intercept[IllegalArgumentException](Kll.fromBytes(b))
+      assert(e.getMessage.startsWith("corrupt KLL payload"), e.getMessage)
+    }
+    // decodes to a usable sketch or is rejected; any other exception fails
+    def totalOn(b: Array[Byte]): Unit =
+      try {
+        val s = Kll.fromBytes(b)
+        s.quantile(0.5); s.rank(0.5)
+        if (s.k == kll.k) Kll.fromBytes(s.merge(Kll.fromBytes(good)).toBytes)
+      } catch {
+        case e: IllegalArgumentException =>
+          assert(e.getMessage.startsWith("corrupt KLL payload"), e.getMessage)
+      }
+
+    assert(nLevels > 3 && java.util.Arrays.equals(Kll.fromBytes(good).toBytes, good))
+    (0 until good.length).foreach(n => rejected(java.util.Arrays.copyOf(good, n)))
+    rejected(good ++ new Array[Byte](8))
+    rejected(patched(_.putInt(0, 7)))                         // k < 8
+    rejected(patched(_.putLong(4, kll.total + 1)))            // total != weight sum
+    for (levels <- Seq(0, -1, 65, Int.MaxValue)) rejected(patched(_.putInt(20, levels)))
+    for (size <- Seq(-1, Int.MinValue, Int.MaxValue)) rejected(patched(_.putInt(24, size)))
+    rejected(patched(_.putDouble(itemsAt, Double.NaN)))
+    rejected(patched(_.putLong(itemsAt, 0x7ff8dead0000beefL))) // a NaN payload
+    // every single-bit flip in the header and level sizes, and a sample of
+    // flips in the items
+    val bits = (0 until itemsAt * 8) ++ Seq.fill(2000)(itemsAt * 8 + rnd.nextInt((good.length - itemsAt) * 8))
+    for (bit <- bits) {
+      val b = good.clone()
+      b(bit / 8) = (b(bit / 8) ^ (1 << (bit % 8))).toByte
+      totalOn(b)
+    }
+    // an item moved one level up keeps the length but not the weight sum
+    val sizes = java.nio.ByteBuffer.wrap(good, 24, 4 * nLevels).slice().asIntBuffer()
+    val h = (0 until nLevels - 1).find(sizes.get(_) > 0).get
+    rejected(patched { b =>
+      b.putInt(24 + 4 * h, sizes.get(h) - 1).putInt(28 + 4 * h, sizes.get(h + 1) + 1)
+    })
+  }
+
   test("compact aggregation-buffer encodings round-trip to identical state " +
     "and shrink sparse buffers") {
     val rnd = new java.util.SplittableRandom(5L)
