@@ -2,7 +2,7 @@ package graft.spark.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.sketches._
 
@@ -144,9 +144,7 @@ case class CountMinSketchAgg(
 }
 
 /** (item, weight) count-min: each row adds `weight` to its item's counters —
- * byte-identical to `weight` repetitions (CountMin addString(v, count)).
- * A string or long item with a long or int weight, both bound references,
- * takes unboxed ordinal reads; anything else goes through `eval`. */
+ * byte-identical to `weight` repetitions (CountMin addString(v, count)). */
 case class CountMinWeightedSketchAgg(
     item: Expression,
     weight: Expression,
@@ -160,46 +158,25 @@ case class CountMinWeightedSketchAgg(
   override def children: Seq[Expression] = Seq(item, weight)
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
 
-  @transient private lazy val itemOrdinal: Int = item match {
-    case b: BoundReference if b.dataType == StringType || b.dataType == LongType => b.ordinal
-    case _ => -1
-  }
-  @transient private lazy val weightOrdinal: Int = weight match {
-    case b: BoundReference if b.dataType == LongType || b.dataType == IntegerType => b.ordinal
-    case _ => -1
-  }
-  @transient private lazy val stringItem: Boolean = item.dataType == StringType
-  @transient private lazy val longWeight: Boolean = weight.dataType == LongType
-
   override def update(buffer: CountMin, input: InternalRow): CountMin = {
-    val iOrd = itemOrdinal
-    val wOrd = weightOrdinal
-    if (iOrd >= 0 && wOrd >= 0) {
-      if (!input.isNullAt(iOrd) && !input.isNullAt(wOrd)) {
-        val cnt = if (longWeight) input.getLong(wOrd) else input.getInt(wOrd).toLong
-        if (stringItem) buffer.addHash(ItemSketchAgg.utf8Hash(input.getUTF8String(iOrd)), cnt)
-        else buffer.addLong(input.getLong(iOrd), cnt)
+    val v = item.eval(input)
+    val w = weight.eval(input)
+    if (v != null && w != null) {
+      val cnt = w match { // Int weight columns are valid DSL inputs too
+        case l: java.lang.Long    => l.longValue()
+        case i: java.lang.Integer => i.longValue()
+        case other =>
+          throw new IllegalArgumentException(
+            s"cms_sketch_weighted: unsupported weight ${other.getClass.getSimpleName}")
       }
-    } else {
-      val v = item.eval(input)
-      val w = weight.eval(input)
-      if (v != null && w != null) {
-        val cnt = w match { // Int weight columns are valid DSL inputs too
-          case l: java.lang.Long    => l.longValue()
-          case i: java.lang.Integer => i.longValue()
-          case other =>
-            throw new IllegalArgumentException(
-              s"cms_sketch_weighted: unsupported weight ${other.getClass.getSimpleName}")
-        }
-        v match {
-          case s: org.apache.spark.unsafe.types.UTF8String =>
-            buffer.addHash(ItemSketchAgg.utf8Hash(s), cnt)
-          case l: java.lang.Long                           => buffer.addLong(l.longValue(), cnt)
-          case i: java.lang.Integer                        => buffer.addLong(i.longValue(), cnt)
-          case other =>
-            throw new IllegalArgumentException(
-              s"cms_sketch_weighted: unsupported input ${other.getClass.getSimpleName}")
-        }
+      v match {
+        case s: org.apache.spark.unsafe.types.UTF8String =>
+          buffer.addHash(ItemSketchAgg.utf8Hash(s), cnt)
+        case l: java.lang.Long                           => buffer.addLong(l.longValue(), cnt)
+        case i: java.lang.Integer                        => buffer.addLong(i.longValue(), cnt)
+        case other =>
+          throw new IllegalArgumentException(
+            s"cms_sketch_weighted: unsupported input ${other.getClass.getSimpleName}")
       }
     }
     buffer

@@ -372,35 +372,6 @@ class ExpressionSpec extends AnyFunSuite {
       b(functions.cms_sketch_weighted(col("s"), col("wi"), 5, 512)), weightedCms.toBytes))
   }
 
-  test("cms_sketch_weighted reads string or long items with long or int weights " +
-    "by ordinal, byte-identical to in-process count-min") {
-    import spark.implicits._
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // every fifth row has one null field; such rows are skipped
-    val rows = (0 until 400).map { i =>
-      def orNull[A](a: A, field: Int): Option[A] = if (i % 5 == 0 && i / 5 % 4 == field) None else Some(a)
-      (orNull(s"it_${i % 37}", 0), orNull((i % 41).toLong - 20, 1), orNull((i % 7 + 1).toLong, 2),
-        orNull(i % 3 + 1, 3))
-    }
-    val df = rows.toDF("s", "l", "wl", "wi")
-    for (item <- Seq("s", "l"); weight <- Seq("wl", "wi")) {
-      val agg = ColumnBridge.column(
-        graft.spark.expressions.CountMinWeightedSketchAgg(
-          ColumnBridge.expression(col(item)), ColumnBridge.expression(col(weight)), 5, 512)
-          .toAggregateExpression())
-      val expected = graft.sketches.CountMin(5, 512)
-      rows.foreach { case (s, l, wl, wi) =>
-        val w = if (weight == "wl") wl else wi.map(_.toLong)
-        for (cnt <- w) {
-          if (item == "s") s.foreach(expected.addString(_, cnt))
-          else l.foreach(expected.addLong(_, cnt))
-        }
-      }
-      val got = df.agg(agg).collect()(0).getAs[Array[Byte]](0)
-      assert(java.util.Arrays.equals(got, expected.toBytes), s"item $item, weight $weight")
-    }
-  }
-
   test("compact shuffle buffers: grouped native companion sketches stay " +
     "byte-identical to in-process sketches at high group cardinality") {
     import spark.implicits._
